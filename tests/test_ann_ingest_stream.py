@@ -240,9 +240,6 @@ def test_split_stream_folds_through_both_quantizer_levels(spark, tmp_path):
         fragmented_keys,
         partition_file_census,
     )
-    from vacancy_analyser_spark.streaming.ann_ingest import (
-        start_ann_split_ingest_stream,
-    )
 
     path = str(tmp_path / "split_stream")
     cents = spark.createDataFrame(
@@ -277,7 +274,7 @@ def test_split_stream_folds_through_both_quantizer_levels(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_ann_split_ingest_stream(
+    q = start_ann_ingest_stream(
         stream, path, str(tmp_path / "ckpt_s"), compact_every=1
     )
     q.awaitTermination(120)
@@ -299,7 +296,7 @@ def test_split_stream_folds_through_both_quantizer_levels(spark, tmp_path):
         .option("recursiveFileLookup", True)
         .parquet(src)
     )
-    q2 = start_ann_split_ingest_stream(stream2, path, str(tmp_path / "ckpt_s2"))
+    q2 = start_ann_ingest_stream(stream2, path, str(tmp_path / "ckpt_s2"))
     q2.awaitTermination(120)
     assert spark.read.parquet(vectors).count() == 6
 
@@ -317,25 +314,19 @@ def _stream_src(spark, tmp_path, name, batches):
 def test_ivf2_stream_folds_into_nested_layout_and_replays_idempotently(
     spark, sf_dir, tmp_path
 ):
-    from vacancy_analyser_spark.plans.similarity import (
-        coarse_centroid_count,
-        ivf2_build_index_frame,
-    )
-    from vacancy_analyser_spark.streaming.ann_ingest import (
-        start_ann_ivf2_ingest_stream,
-    )
+    from vacancy_analyser_spark.plans.similarity import IVF2
 
     vecs = _vectors(spark, sf_dir)
     part = F.pmod(F.col("vec_id"), F.lit(4))
     base = vecs.filter(part < 2)
     k = auto_centroids(base.count())
     path = str(tmp_path / "ivf2_stream")
-    ivf2_build_index_frame(base, path, k, coarse_centroid_count(k))
+    IVF2.build(base, path, k)
     stream, src = _stream_src(
         spark, tmp_path, "ivf2_arrivals",
         [vecs.filter(part == 2), vecs.filter(part == 3)],
     )
-    q = start_ann_ivf2_ingest_stream(stream, path, str(tmp_path / "ck2"))
+    q = start_ann_ingest_stream(stream, path, str(tmp_path / "ck2"))
     q.awaitTermination(120)
 
     vectors = os.path.join(path, "vectors")
@@ -359,31 +350,28 @@ def test_ivf2_stream_folds_into_nested_layout_and_replays_idempotently(
     stream2 = spark.readStream.schema(SCHEMA).option(
         "recursiveFileLookup", True
     ).parquet(src)
-    q2 = start_ann_ivf2_ingest_stream(stream2, path, str(tmp_path / "ck2b"))
+    q2 = start_ann_ingest_stream(stream2, path, str(tmp_path / "ck2b"))
     q2.awaitTermination(120)
     assert spark.read.parquet(vectors).count() == len(want)
 
 
 def test_ivfpq_stream_codes_from_frozen_codebook(spark, sf_dir, tmp_path):
     from vacancy_analyser_spark.plans.similarity import (
+        IVFPQ,
         _pq_assign,
         _pq_subvectors,
-        ivfpq_build_index_frame,
-    )
-    from vacancy_analyser_spark.streaming.ann_ingest import (
-        start_ann_ivfpq_ingest_stream,
     )
 
     vecs = _vectors(spark, sf_dir)
     part = F.pmod(F.col("vec_id"), F.lit(4))
     base = vecs.filter(part < 2)
     path = str(tmp_path / "ivfpq_stream")
-    ivfpq_build_index_frame(base, path, n_centroids=auto_centroids(base.count()))
+    IVFPQ.build(base, path, n_centroids=auto_centroids(base.count()))
     stream, src = _stream_src(
         spark, tmp_path, "ivfpq_arrivals",
         [vecs.filter(part == 2), vecs.filter(part == 3)],
     )
-    q = start_ann_ivfpq_ingest_stream(stream, path, str(tmp_path / "ckq"))
+    q = start_ann_ingest_stream(stream, path, str(tmp_path / "ckq"))
     q.awaitTermination(120)
 
     vectors = os.path.join(path, "vectors")
@@ -420,6 +408,14 @@ def test_delete_stream_serves_the_split_layout(spark, tmp_path):
     from vacancy_analyser_spark.streaming.ann_ingest import start_ann_delete_stream
 
     path = str(tmp_path / "split_del_stream")
+    # the split quantizer tables a real build writes first
+    spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "centroid_id bigint, c_emb array<double>"
+    ).write.parquet(os.path.join(path, "centroids"))
+    spark.createDataFrame(
+        [(0, 0, [0.9, 0.3]), (0, 1, [0.9, -0.3])],
+        "centroid_id bigint, sub_id int, s_emb array<double>",
+    ).write.parquet(os.path.join(path, "sub_centroids"))
     vecs = spark.createDataFrame(
         [(1, [1.0, 0.2], 0, 0), (2, [1.0, -0.2], 0, 1), (3, [0.1, 1.0], 1, 0),
          (4, [1.0, 0.3], 0, 0)],
@@ -442,10 +438,7 @@ def test_delete_stream_serves_the_split_layout(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_ann_delete_stream(
-        stream, path, str(tmp_path / "ckd"),
-        partition_cols=("centroid_id", "sub_id"),
-    )
+    q = start_ann_delete_stream(stream, path, str(tmp_path / "ckd"))
     q.awaitTermination(120)
 
     vectors = os.path.join(path, "vectors")
@@ -457,10 +450,7 @@ def test_delete_stream_serves_the_split_layout(spark, tmp_path):
     stream2 = spark.readStream.schema("vec_id bigint").option(
         "recursiveFileLookup", True
     ).parquet(src)
-    q2 = start_ann_delete_stream(
-        stream2, path, str(tmp_path / "ckd2"),
-        partition_cols=("centroid_id", "sub_id"),
-    )
+    q2 = start_ann_delete_stream(stream2, path, str(tmp_path / "ckd2"))
     q2.awaitTermination(120)
     assert {
         r["vec_id"] for r in spark.read.parquet(vectors).select("vec_id").collect()

@@ -148,22 +148,17 @@ def test_nested_layout_lookup_drives_zero_index_read_delete(spark, sf_dir, tmp_p
     victim tuples from a bucket-pruned point read (plan-asserted — no
     index scan), the delete consumes them via touched=, and the refreshed
     lookup equals the rewritten index's scan truth including coarse_id."""
-    from vacancy_analyser_spark.plans.similarity import (
-        auto_centroids,
-        coarse_centroid_count,
-        ivf2_build_index_frame,
-    )
+    from vacancy_analyser_spark.plans.similarity import IVF2, auto_centroids
 
     cols = ("coarse_id", "centroid_id")
     vecs = _vectors(spark, sf_dir)
     k = auto_centroids(vecs.count())
-    kc = coarse_centroid_count(k)
     path = str(tmp_path / "ivf2_lk")
-    ivf2_build_index_frame(vecs, path, k, kc)
-    build_lookup(spark, path, partition_cols=cols)
+    IVF2.build(vecs, path, k)
+    build_lookup(spark, path)
 
     dels = vecs.filter(F.pmod(F.col("vec_id"), F.lit(16)) == 5).select("vec_id")
-    located = locate(spark, path, dels, partition_cols=cols)
+    located = locate(spark, path, dels)
     plan = located._jdf.queryExecution().executedPlan().toString()
     pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert any("bucket" in p for p in pfs)  # point read, never the index
@@ -174,12 +169,10 @@ def test_nested_layout_lookup_drives_zero_index_read_delete(spark, sf_dir, tmp_p
         for r in located.select(*cols).distinct().collect()
     )
     assert touched and all(len(t) == 2 for t in touched)
-    got_touched = ivf_index_delete(
-        spark, path, dels, partition_cols=cols, touched=touched
-    )
+    got_touched = ivf_index_delete(spark, path, dels, touched=touched)
     assert got_touched == touched
 
-    refreshed = refresh_lookup_buckets(spark, path, dels, partition_cols=cols)
+    refreshed = refresh_lookup_buckets(spark, path, dels)
     assert refreshed
     idx_truth = {
         (r["vec_id"], r["coarse_id"], r["centroid_id"])

@@ -231,6 +231,10 @@ def test_compact_lookup_table(spark, tmp_path):
         (F.col("id") % 5).cast("int").alias("centroid_id"),
         F.array(F.lit(1.0)).alias("embedding"),
     )
+    # the flat quantizer table a real build writes first
+    spark.range(5).select(
+        F.col("id").alias("centroid_id"), F.array(F.lit(1.0)).alias("c_emb")
+    ).write.parquet(os.path.join(path, "centroids"))
     vecs.write.partitionBy("centroid_id").parquet(os.path.join(path, "vectors"))
     build_lookup(spark, path)
     lookup = os.path.join(path, "lookup")
@@ -267,8 +271,6 @@ def test_compact_split_layout_two_column_keys(spark, tmp_path):
     partition keys: fragment (0,0) with a split-aware add, compact, and
     the nested directory comes back to one right-sized file with
     everything else byte-identical."""
-    from vacancy_analyser_spark.plans.similarity import split_index_incremental_add
-
     path = str(tmp_path / "split_c")
     cents = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "centroid_id int, c_emb array<double>"
@@ -287,7 +289,7 @@ def test_compact_split_layout_two_column_keys(spark, tmp_path):
         os.path.join(path, "vectors")
     )
     for i in range(2):
-        split_index_incremental_add(
+        ivf_index_incremental_add(
             spark,
             path,
             spark.createDataFrame(

@@ -174,11 +174,7 @@ def test_crash_with_nothing_to_recover_raises(spark, tmp_path):
 def test_ivf2_crash_between_renames_recovers(spark, tmp_path):
     """The nested twin shares the crash-state contract: between-renames
     state must heal, not sweep the survivors."""
-    from vacancy_analyser_spark.plans.similarity import (
-        coarse_centroid_count,
-        ivf2_build_index_frame,
-        ivf2_global_retrain,
-    )
+    from vacancy_analyser_spark.plans.similarity import IVF2
 
     content = spark.createDataFrame(
         [(i, [1.0 if i < 12 else 0.0, 0.0 if i < 12 else 1.0, (i % 5) * 0.01])
@@ -187,11 +183,11 @@ def test_ivf2_crash_between_renames_recovers(spark, tmp_path):
     )
     path = str(tmp_path / "idx2lcr")
     k = auto_centroids(content.count())
-    ivf2_build_index_frame(content, path, k, coarse_centroid_count(k))
-    ivf2_build_index_frame(content, path + "__rebuild", k, coarse_centroid_count(k))
+    IVF2.build(content, path, k)
+    IVF2.build(content, path + "__rebuild", k)
     os.rename(path, path + "__retired")
 
-    assert ivf2_global_retrain(spark, path, _verdict(spark, True)) is True
+    assert ivf_global_retrain(spark, path, _verdict(spark, True)) is True
     assert not os.path.exists(path + "__rebuild")
     assert not os.path.exists(path + "__retired")
     for d in ("vectors", "fine", "coarse"):
@@ -232,12 +228,7 @@ def test_ivf2_global_retrain_rebuilds_both_levels_and_swaps(spark, tmp_path):
     """The nested twin: both quantizer levels must retrain on current
     content and the swap must publish a complete nested index (vectors +
     fine + coarse), with no staging state left behind."""
-    from vacancy_analyser_spark.plans.similarity import (
-        coarse_centroid_count,
-        ivf2_build_index_frame,
-        ivf2_global_retrain,
-        ivf2_index_incremental_add,
-    )
+    from vacancy_analyser_spark.plans.similarity import IVF2
 
     base = spark.createDataFrame(
         [(i, [1.0, 0.0, (i % 5) * 0.01]) for i in range(12)],
@@ -248,11 +239,11 @@ def test_ivf2_global_retrain_rebuilds_both_levels_and_swaps(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     path = str(tmp_path / "idx2l")
-    ivf2_build_index_frame(base, path, 2, coarse_centroid_count(2))
-    ivf2_index_incremental_add(spark, path, drift)
+    IVF2.build(base, path, 2)
+    ivf_index_incremental_add(spark, path, drift)
     content = base.unionByName(drift)
 
-    assert ivf2_global_retrain(spark, path, _verdict(spark, True)) is True
+    assert ivf_global_retrain(spark, path, _verdict(spark, True)) is True
     assert not os.path.exists(path + "__rebuild")
     assert not os.path.exists(path + "__retired")
     for d in ("vectors", "fine", "coarse"):
@@ -260,7 +251,7 @@ def test_ivf2_global_retrain_rebuilds_both_levels_and_swaps(spark, tmp_path):
 
     k = auto_centroids(content.count())
     ref = str(tmp_path / "ref2l")
-    ivf2_build_index_frame(content, ref, k, coarse_centroid_count(k))
+    IVF2.build(content, ref, k)
 
     def _nested(p):
         return {
@@ -274,5 +265,5 @@ def test_ivf2_global_retrain_rebuilds_both_levels_and_swaps(spark, tmp_path):
 
     # false verdict after the swap: provable no-op
     before = _tree_digest(path)
-    assert ivf2_global_retrain(spark, path, _verdict(spark, False)) is False
+    assert ivf_global_retrain(spark, path, _verdict(spark, False)) is False
     assert _tree_digest(path) == before

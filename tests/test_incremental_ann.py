@@ -148,20 +148,19 @@ def test_ivfpq_incremental_add_matches_frozen_rebuild(spark, sf_dir, tmp_path):
     the result equal to encoding+assigning the union against the same
     frozen artifacts."""
     from vacancy_analyser_spark.plans.similarity import (
+        IVFPQ,
         _pq_assign,
         _pq_subvectors,
-        ivfpq_build_index_frame,
-        ivfpq_index_incremental_add,
     )
 
     base, batch = _split(spark, sf_dir)
     k = auto_centroids(base.count())
     path = str(tmp_path / "ivfpq_incr")
-    ivfpq_build_index_frame(base, path, n_centroids=k)
+    IVFPQ.build(base, path, n_centroids=k)
     vectors = os.path.join(path, "vectors")
     before = _file_census(vectors)
 
-    touched = ivfpq_index_incremental_add(spark, path, batch)
+    touched = ivf_index_incremental_add(spark, path, batch)
     after = _file_census(vectors)
     for rel, meta in before.items():
         assert after.get(rel) == meta, f"pre-existing file changed: {rel}"
@@ -200,20 +199,16 @@ def test_ivf2_incremental_add_appends_into_nested_layout(spark, sf_dir, tmp_path
     nested-partition append, untouched directories byte-identical, and
     the post-add content equal to assigning the union against the frozen
     fine centroids."""
-    from vacancy_analyser_spark.plans.similarity import (
-        coarse_centroid_count,
-        ivf2_build_index_frame,
-        ivf2_index_incremental_add,
-    )
+    from vacancy_analyser_spark.plans.similarity import IVF2
 
     base, batch = _split(spark, sf_dir)
     k = auto_centroids(base.count())
     path = str(tmp_path / "ivf2_incr")
-    ivf2_build_index_frame(base, path, k, coarse_centroid_count(k))
+    IVF2.build(base, path, k)
     vectors = os.path.join(path, "vectors")
     before = _file_census(vectors)
 
-    touched = ivf2_index_incremental_add(spark, path, batch)
+    touched = ivf_index_incremental_add(spark, path, batch)
     after = _file_census(vectors)
     for rel, meta in before.items():
         assert after.get(rel) == meta, f"pre-existing file changed: {rel}"
@@ -364,11 +359,17 @@ def test_nested_delete_prunes_empty_parents_via_uri(spark, tmp_path):
     )
     local = tmp_path / "ivf2_sweep_uri"
     path = f"file:{local}"
+    # the two-level quantizer tables a real build writes first
+    spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "coarse_id bigint, g_emb array<double>"
+    ).write.parquet(f"{path}/coarse")
+    spark.createDataFrame(
+        [(10, [1.0, 0.0], 0), (20, [0.0, 1.0], 1)],
+        "centroid_id bigint, c_emb array<double>, coarse_id bigint",
+    ).write.parquet(f"{path}/fine")
     df.write.partitionBy("coarse_id", "centroid_id").parquet(f"{path}/vectors")
     dels = spark.createDataFrame([(1,), (2,)], "vec_id long")
-    touched = ivf_index_delete(
-        spark, path, dels, partition_cols=("coarse_id", "centroid_id")
-    )
+    touched = ivf_index_delete(spark, path, dels)
     assert touched == [(0, 10)]
     assert not (local / "vectors" / "coarse_id=0").exists()
     left = {
@@ -444,11 +445,9 @@ def _mk_split_layout(spark, path):
 
 
 def test_split_add_two_stage_assignment_and_byte_identity(spark, tmp_path):
-    """split_index_incremental_add assigns through BOTH frozen quantizer
+    """ivf_index_incremental_add assigns through BOTH frozen quantizer
     levels (split cell → its nearest sub-cell, healthy cell → sub_id=0)
     and appends only into touched (centroid_id, sub_id) partitions."""
-    from vacancy_analyser_spark.plans.similarity import split_index_incremental_add
-
     path = str(tmp_path / "split_idx")
     _mk_split_layout(spark, path)
     vectors = os.path.join(path, "vectors")
@@ -457,7 +456,7 @@ def test_split_add_two_stage_assignment_and_byte_identity(spark, tmp_path):
     batch = spark.createDataFrame(
         [(100, [1.0, 0.25])], "vec_id long, embedding array<double>"
     )
-    touched = split_index_incremental_add(spark, path, batch)
+    touched = ivf_index_incremental_add(spark, path, batch)
     assert touched == [(0, 0)]
 
     after = _file_census(vectors)
@@ -473,7 +472,7 @@ def test_split_add_two_stage_assignment_and_byte_identity(spark, tmp_path):
     assert (100, 0, 0) in got and len(got) == 4
 
     # healthy-cell batch lands in sub_id=0; opposite sub-cell reachable
-    touched = split_index_incremental_add(
+    touched = ivf_index_incremental_add(
         spark,
         path,
         spark.createDataFrame(
@@ -485,22 +484,20 @@ def test_split_add_two_stage_assignment_and_byte_identity(spark, tmp_path):
 
 
 def test_split_add_skip_existing_is_idempotent(spark, tmp_path):
-    from vacancy_analyser_spark.plans.similarity import split_index_incremental_add
-
     path = str(tmp_path / "split_idx2")
     _mk_split_layout(spark, path)
     vectors = os.path.join(path, "vectors")
     batch = spark.createDataFrame(
         [(100, [1.0, 0.25])], "vec_id long, embedding array<double>"
     )
-    split_index_incremental_add(spark, path, batch, skip_existing=True)
+    ivf_index_incremental_add(spark, path, batch, skip_existing=True)
     n_1 = spark.read.parquet(vectors).count()
-    split_index_incremental_add(spark, path, batch, skip_existing=True)
+    ivf_index_incremental_add(spark, path, batch, skip_existing=True)
     assert spark.read.parquet(vectors).count() == n_1
 
 
 def test_split_layout_delete_sweeps_emptied_sub_leaf(spark, tmp_path):
-    """The generic delete on partition_cols=(centroid_id, sub_id): empty
+    """The generic delete on the split key (centroid_id, sub_id): empty
     a sub-leaf → its directory is swept; the parent cell dir survives
     while its other sub-leaf has rows."""
     from vacancy_analyser_spark.plans.similarity import ivf_index_delete
@@ -509,9 +506,7 @@ def test_split_layout_delete_sweeps_emptied_sub_leaf(spark, tmp_path):
     _mk_split_layout(spark, path)
     vectors = os.path.join(path, "vectors")
     dels = spark.createDataFrame([(2,)], "vec_id long")
-    touched = ivf_index_delete(
-        spark, path, dels, partition_cols=("centroid_id", "sub_id")
-    )
+    touched = ivf_index_delete(spark, path, dels)
     assert touched == [(0, 1)]
     assert not os.path.exists(os.path.join(vectors, "centroid_id=0", "sub_id=1"))
     assert os.path.exists(os.path.join(vectors, "centroid_id=0", "sub_id=0"))

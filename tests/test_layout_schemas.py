@@ -17,15 +17,19 @@ import pytest
 from pyspark.sql import types as T
 
 from vacancy_analyser_spark.plans.similarity import (
+    FLAT,
+    IVF2,
+    IVFPQ,
     LAYOUT_SCHEMAS,
+    SPLIT,
     _vectors,
     auto_centroids,
-    coarse_centroid_count,
-    ivf2_build_index_frame,
+    index_layout,
     ivf_build_index_frame,
-    ivfpq_build_index_frame,
-    split_build_index,
 )
+
+#: the layout record each fixture directory was built with
+_BUILT = {"ivf": FLAT, "ivfpq": IVFPQ, "ivf2": IVF2, "split": SPLIT}
 
 
 def _ddl(spark, path: str) -> list[tuple[str, T.DataType]]:
@@ -45,11 +49,10 @@ def layout_root(spark, sf_dir, tmp_path_factory):
     vecs = _vectors(spark, sf_dir).select("vec_id", "embedding")
     n = vecs.count()
     k = auto_centroids(n)
-    kc = coarse_centroid_count(k)
     ivf_build_index_frame(vecs, os.path.join(root, "ivf"), n_centroids=k)
-    ivfpq_build_index_frame(vecs, os.path.join(root, "ivfpq"), n_centroids=k)
-    ivf2_build_index_frame(vecs, os.path.join(root, "ivf2"), k, kc)
-    split_build_index(spark, sf_dir, os.path.join(root, "split"))
+    IVFPQ.build(vecs, os.path.join(root, "ivfpq"), n_centroids=k)
+    IVF2.build(vecs, os.path.join(root, "ivf2"), k)
+    SPLIT.build(vecs, os.path.join(root, "split"))
     return root
 
 
@@ -70,6 +73,8 @@ def layout_root(spark, sf_dir, tmp_path_factory):
     ],
 )
 def test_layout_constant_matches_inference(spark, layout_root, layout, table, kind):
+    # the index directory resolves to the record it was built with
+    assert index_layout(spark, os.path.join(layout_root, layout), None) is _BUILT[layout]
     inferred = _ddl(spark, os.path.join(layout_root, layout, table))
     assert inferred == _const(LAYOUT_SCHEMAS[kind]), (
         f"{layout}/{table}: builder output drifted from LAYOUT_SCHEMAS[{kind!r}]"
@@ -87,7 +92,11 @@ def test_layout_constant_matches_inference(spark, layout_root, layout, table, ki
 def test_lookup_constant_matches_inference(spark, layout_root, layout, pcols, kind):
     from vacancy_analyser_spark.operators.ann_lookup import build_lookup
 
-    build_lookup(spark, os.path.join(layout_root, layout), partition_cols=pcols)
+    path = os.path.join(layout_root, layout)
+    # the index directory resolves to its own record and partition key
+    found = index_layout(spark, path, None)
+    assert found is _BUILT[layout] and found.partition_cols == pcols
+    build_lookup(spark, path)
     inferred = _ddl(spark, os.path.join(layout_root, layout, "lookup"))
     assert inferred == _const(LAYOUT_SCHEMAS[kind]), (
         f"{layout}/lookup drifted from LAYOUT_SCHEMAS[{kind!r}]"

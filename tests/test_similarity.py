@@ -417,8 +417,9 @@ def test_ivfpq_index_serve_matches_in_query_composition(spark, sf_dir):
     import re
 
     from vacancy_analyser_spark.plans.similarity import (
-        _ivfpq_index_is_fresh,
-        _ivfpq_index_path,
+        IVFPQ,
+        _index_is_fresh,
+        _ivf_index_path,
         ann_ivfpq_index_serve,
         ann_ivfpq_topk,
     )
@@ -433,7 +434,7 @@ def test_ivfpq_index_serve_matches_in_query_composition(spark, sf_dir):
     from vacancy_analyser_spark.plans.similarity import _vectors, auto_centroids
 
     k = auto_centroids(_vectors(spark, sf_dir).count())
-    assert _ivfpq_index_is_fresh(_ivfpq_index_path(sf_dir, k), sf_dir)
+    assert _index_is_fresh(IVFPQ, _ivf_index_path(IVFPQ, sf_dir, k, "index"), sf_dir, None)
 
 
 def test_ivfpq_batch_covers_queries_and_agrees_with_single(spark, sf_dir):
@@ -634,12 +635,12 @@ def test_ivf2_index_serve_matches_in_query_and_prunes_both_levels(spark, sf_dir)
     import re
 
     from vacancy_analyser_spark.plans.similarity import (
-        _ivf2_index_path,
+        IVF2,
+        _ivf_index_path,
         _vectors,
         ann_ivf2_index_serve,
         ann_ivf2_topk,
         auto_centroids,
-        coarse_centroid_count,
     )
     from vacancy_analyser_spark.io import materialization_is_fresh
 
@@ -653,7 +654,7 @@ def test_ivf2_index_serve_matches_in_query_and_prunes_both_levels(spark, sf_dir)
     k = auto_centroids(_vectors(spark, sf_dir).count())
     import os
 
-    root = _ivf2_index_path(sf_dir, k, coarse_centroid_count(k))
+    root = _ivf_index_path(IVF2, sf_dir, k, "index")
     src = os.path.join(sf_dir, "embeddings.parquet")
     # all three stored halves fresh: quantizer tables + bucketed vectors
     for d in ("vectors", "fine", "coarse"):

@@ -9,7 +9,9 @@ maintains that table, for EVERY served layout: the lookup row carries the
 layout's full partition key tuple — ``("centroid_id",)`` for flat
 IVF/IVFPQ, ``("coarse_id", "centroid_id")`` for the two-level layout,
 ``("centroid_id", "sub_id")`` for the split layout — so the nested
-layouts get the same zero-index-read takedown as the flat one.
+layouts get the same zero-index-read takedown as the flat one. Each op
+reads that key from the index directory itself
+(plans.similarity.index_layout — a Hadoop-FS listing, no Spark job).
 
 - ``build_lookup``: one column-pruned scan of ``vectors/`` writes
   ``lookup/`` as (vec_id, *partition_cols) partitioned by
@@ -64,6 +66,12 @@ def _bucket_col():
     return F.pmod(F.xxhash64(F.col("vec_id")), F.lit(N_LOOKUP_BUCKETS)).alias("bucket")
 
 
+def _partition_cols(spark: SparkSession, index_path: str) -> tuple[str, ...]:
+    from ..plans.similarity import index_layout
+
+    return index_layout(spark, index_path, None).partition_cols
+
+
 def _key_cols(partition_cols: tuple[str, ...]) -> list:
     return [F.col(c).cast("bigint").alias(c) for c in partition_cols]
 
@@ -80,21 +88,12 @@ def _vectors_key_schema(partition_cols: tuple[str, ...]) -> str:
     return "vec_id BIGINT, " + ", ".join(f"{c} BIGINT" for c in partition_cols)
 
 
-def _lookup_schema(partition_cols: tuple[str, ...]) -> str:
-    """The lookup table's own static schema (build_lookup writes exactly
-    this: vec_id, the bigint-cast key columns, the bucket partition)."""
-    return _vectors_key_schema(partition_cols) + ", bucket INT"
-
-
-def build_lookup(
-    spark: SparkSession,
-    index_path: str,
-    partition_cols: tuple[str, ...] = ("centroid_id",),
-) -> str:
+def build_lookup(spark: SparkSession, index_path: str) -> str:
     """Derive ``lookup/`` from the index's vectors table (one column-pruned
     scan — vec_id + the layout's partition key columns, never embeddings).
-    ``partition_cols`` is the served layout's full partition key, so the
-    lookup can drive a zero-index-read delete on nested layouts too."""
+    The rows carry the layout's full partition key, so the lookup can
+    drive a zero-index-read delete on nested layouts too."""
+    partition_cols = _partition_cols(spark, index_path)
     lookup_dir = os.path.join(index_path, "lookup")
     (
         spark.read.schema(_vectors_key_schema(partition_cols))
@@ -108,16 +107,15 @@ def build_lookup(
     return lookup_dir
 
 
-def locate(
-    spark: SparkSession,
-    index_path: str,
-    ids: DataFrame,
-    partition_cols: tuple[str, ...] = ("centroid_id",),
-) -> DataFrame:
+def locate(spark: SparkSession, index_path: str, ids: DataFrame) -> DataFrame:
     """(vec_id, *partition_cols) for the given ids — reads only the ids'
     hash buckets. The distinct-bucket collect is bounded by design
     (≤ N_LOOKUP_BUCKETS values); the ids themselves join distributed,
     broadcast only when the bounded probe proves the batch small."""
+    from ..plans.similarity import LAYOUT_SCHEMAS, index_layout
+
+    layout = index_layout(spark, index_path, None)
+    partition_cols = layout.partition_cols
     # one materialization serves the probe, the bucket projection and the
     # semi-join — without it an expensive ids lineage is re-evaluated
     # three times per call (and per micro-batch in a takedown stream)
@@ -137,7 +135,7 @@ def locate(
     if ids.limit(LOOKUP_BROADCAST_MAX_IDS + 1).count() <= LOOKUP_BROADCAST_MAX_IDS:
         ids = F.broadcast(ids)
     lk = (
-        spark.read.schema(_lookup_schema(partition_cols))
+        spark.read.schema(LAYOUT_SCHEMAS[layout.lookup])
         .parquet(os.path.join(index_path, "lookup"))
         .filter(F.col("bucket").isin(buckets))
     )
@@ -157,10 +155,7 @@ def compact_lookup(spark: SparkSession, index_path: str) -> list[dict]:
 
 
 def refresh_lookup_buckets(
-    spark: SparkSession,
-    index_path: str,
-    changed_ids: DataFrame,
-    partition_cols: tuple[str, ...] = ("centroid_id",),
+    spark: SparkSession, index_path: str, changed_ids: DataFrame
 ) -> list[int]:
     """Re-derive ONLY the lookup buckets the changed ids hash into, from
     the current vectors table (dynamic partition overwrite — untouched
@@ -177,6 +172,7 @@ def refresh_lookup_buckets(
     )
     if not buckets:
         return []
+    partition_cols = _partition_cols(spark, index_path)
     fresh = (
         spark.read.schema(_vectors_key_schema(partition_cols))
         .parquet(os.path.join(index_path, "vectors"))

@@ -15,7 +15,10 @@ engine reassociating the fold.
 from __future__ import annotations
 
 import hashlib
+import os
+from dataclasses import dataclass
 from functools import lru_cache
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -753,73 +756,527 @@ def _layout_read(spark: SparkSession, path: str, kind: str) -> DataFrame:
     """Read an index-interior table with its layout's static schema
     (LAYOUT_SCHEMAS) — zero inference jobs on serve paths. The memo'd
     variant (_memo_read) remains for the FOLD loops, whose single-owner
-    scope already amortizes inference and whose generic delete/compact
-    paths are deliberately layout-agnostic."""
+    scope already amortizes inference (_index_read picks between the
+    two)."""
     return spark.read.schema(LAYOUT_SCHEMAS[kind]).parquet(path)
+
+
+def _index_read(spark: SparkSession, path: str, kind: str, memo: dict | None) -> DataFrame:
+    """Read an index-interior table on a lifecycle path: through the
+    caller's single-owner schema memo when one is held (_memo_read — the
+    first read infers, later reads reuse it), else with the layout's
+    static schema (_layout_read — no inference job at all)."""
+    if memo is None:
+        return _layout_read(spark, path, kind)
+    return _memo_read(spark, path, memo)
+
+
+# --- The layout model ----------------------------------------------------------
+#
+# Four materialized layouts — flat IVF, IVFPQ, two-level IVF and the
+# post-split layout — share ONE implementation of every lifecycle op:
+# build (Layout.build), incremental add, delete, compaction, global
+# retrain with its staging swap, the id→partition lookup
+# (operators/ann_lookup.py), the recipe-tagged index path and the
+# freshness gate. A layout is only data: its quantizer tables, schemas,
+# partition key, trainer, batch assignment and recipe. Index-level ops find
+# the record from the index directory itself (index_layout).
+
+
+@dataclass(frozen=True)
+class Layout:
+    """One materialized ANN index layout.
+
+    - ``quantizers``: the trained tables (LAYOUT_SCHEMAS kinds, which are
+      also their directory names) in write order. ``train`` writes them
+      before any vector row, so an interrupted build never leaves
+      ``vectors/`` without its quantizers — and which of them exist is
+      what identifies the layout of an index directory (index_layout).
+    - ``vectors`` / ``lookup``: the LAYOUT_SCHEMAS kinds of the vectors
+      table and of its id→partition lookup.
+    - ``partition_cols``: the vectors table's partition key, outer
+      directory first — a probe prunes to its cells' directories.
+    - ``cell_cols``: the key an add reports as touched — the leaf cell.
+      The two-level layout's fine centroid determines its coarse cell, so
+      its cells are fine centroid ids.
+    - ``train(vecs, path, n_centroids, memo)``: writes the quantizer
+      tables (``n_centroids=None`` derives auto-k).
+    - ``assign(spark, path, vecs, memo)``: vectors-table rows for a
+      (vec_id, embedding) frame against the STORED, frozen quantizers.
+      The build assigns its own corpus through it too, so a build and a
+      later add can never disagree.
+    - ``path_fmt``: the recipe-tagged directory under spark-warehouse
+      (_ivf_index_path)."""
+
+    quantizers: tuple[str, ...]
+    vectors: str
+    lookup: str
+    partition_cols: tuple[str, ...]
+    cell_cols: tuple[str, ...]
+    train: Callable
+    assign: Callable
+    path_fmt: str
+
+    def build(
+        self, vecs: DataFrame, path: str, n_centroids: int | None = None,
+        schema_memo: dict | None = None,
+    ) -> None:
+        """Materialize this layout over an explicit (vec_id, embedding)
+        frame: the quantizer tables FIRST, then every vector assigned
+        against the stored tables and written
+        ``partitionBy(partition_cols)`` — a probe reads only its cells'
+        directories via partition pruning (plan-asserted in
+        tests/test_similarity.py). Storing the trained tables is what
+        makes serving and incremental adds train-free. ``schema_memo``
+        (see _memo_read) lets a caller that keeps folding into this index
+        reuse the read-backs' inferred schemas."""
+        self.train(vecs, path, n_centroids, schema_memo)
+        self.assign(vecs.sparkSession, path, vecs, schema_memo).write.partitionBy(
+            *self.partition_cols
+        ).mode("overwrite").parquet(os.path.join(path, "vectors"))
+
+
+def _auto_k(vecs: DataFrame, n_centroids: int | None) -> int:
+    return n_centroids if n_centroids is not None else auto_centroids(vecs.count())
+
+
+def _train_flat(vecs: DataFrame, path: str, n_centroids: int | None, memo) -> None:
+    """The Lloyd-refined serving centroids (lloyd_centroids — sample seed
+    + one kmeans_step). Retraining on a grown corpus would move every
+    centroid and invalidate every partition: the index's identity IS its
+    trained centroids."""
+    lloyd_centroids(vecs, _auto_k(vecs, n_centroids)).write.mode("overwrite").parquet(
+        os.path.join(path, "centroids")
+    )
+
+
+def _assign_flat(spark: SparkSession, path: str, vecs: DataFrame, memo) -> DataFrame:
+    cent = _index_read(spark, os.path.join(path, "centroids"), "centroids", memo)
+    return _ranked_against(vecs, cent).filter(F.col("rn") == 1).select(
+        "vec_id", "embedding", "centroid_id"
+    )
+
+
+def _train_ivfpq(vecs: DataFrame, path: str, n_centroids: int | None, memo) -> None:
+    """The PQ codebook (PQ_M·PQ_K rows, trained once over the corpus the
+    way production IVFPQ trains globally), then the flat coarse
+    quantizer."""
+    sub = _pq_subvectors(vecs).persist()
+    sub.count()  # the one-step trainer reads it twice
+    _pq_codebook(sub).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
+    sub.unpersist()
+    _train_flat(vecs, path, n_centroids, memo)
+
+
+def _assign_ivfpq(spark: SparkSession, path: str, vecs: DataFrame, memo) -> DataFrame:
+    """The flat assignment plus the block-ordered PQ codes from the stored
+    codebook. Codes ride NEXT TO the floats, so the ADC scan and the
+    shortlist re-rank both come from the probed partitions (at 100 TB the
+    codes column is PQ_M·log₂PQ_K bits/vector, and column pruning keeps
+    the ADC pass off the float column)."""
+    cb = _index_read(spark, os.path.join(path, "codebook"), "codebook", memo)
+    codes = (
+        _pq_assign(_pq_subvectors(vecs), cb)
+        .groupBy("vec_id")
+        .agg(F.array_sort(F.collect_list(F.struct("block", "code"))).alias("bc"))
+        .select("vec_id", F.transform("bc", lambda s: s["code"]).alias("codes"))
+    )
+    return _assign_flat(spark, path, vecs, memo).join(codes, "vec_id")
+
+
+def _train_ivf2(vecs: DataFrame, path: str, n_centroids: int | None, memo) -> None:
+    """Both Lloyd-trained levels (ivf2_centroids): ``coarse/``, then
+    ``fine/`` — each fine centroid WITH its coarse cell, so an add's
+    nested partition key comes from one stored table and the coarse level
+    does no work per batch."""
+    fine, coarse = ivf2_centroids(vecs, _auto_k(vecs, n_centroids))
+    coarse.write.mode("overwrite").parquet(os.path.join(path, "coarse"))
+    coarse_r = _index_read(vecs.sparkSession, os.path.join(path, "coarse"), "coarse", memo)
+    _fine_to_coarse(fine, coarse_r).write.mode("overwrite").parquet(os.path.join(path, "fine"))
+
+
+def _assign_ivf2(spark: SparkSession, path: str, vecs: DataFrame, memo) -> DataFrame:
+    fine = _index_read(spark, os.path.join(path, "fine"), "fine", memo)
+    return (
+        _ranked_against(vecs, fine.select("centroid_id", "c_emb"))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "embedding", "centroid_id")
+        .join(F.broadcast(fine.select("centroid_id", "coarse_id")), "centroid_id")
+    )
+
+
+def _train_split(vecs: DataFrame, path: str, n_centroids: int | None, memo) -> None:
+    """The post-split quantizers ann_cell_split_retrain computes
+    (_split_state): the base-trained ``centroids/`` (probe level 1), then
+    the split cells' refined ``sub_centroids/`` (probe level 2 — a healthy
+    cell has no rows and serves whole)."""
+    state = _split_state(vecs, n_centroids)
+    if state is None:
+        raise ValueError("empty corpus: nothing to index")
+    cent, assigned, _flagged, sc1, _split_final = state
+    cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    sc1.write.mode("overwrite").parquet(os.path.join(path, "sub_centroids"))
+    assigned.unpersist()
+
+
+def _assign_split(spark: SparkSession, path: str, vecs: DataFrame, memo) -> DataFrame:
+    """Two-stage assignment against BOTH stored levels: the nearest coarse
+    centroid, then — iff that cell was split — the nearest of its
+    sub-centroids, tie-broken exactly like the serve cascade (s_sim desc,
+    sub_id); a healthy cell's vectors take sub_id=0."""
+    cent = _index_read(spark, os.path.join(path, "centroids"), "centroids", memo)
+    sub = _index_read(spark, os.path.join(path, "sub_centroids"), "sub_centroids", memo)
+    s_sim = F.round(cosine(F.col("embedding"), F.col("s_emb")), 9)
+    w_vec = Window.partitionBy("vec_id").orderBy(
+        F.col("s_sim").desc_nulls_last(), F.col("sub_id")
+    )
+    return (
+        _ranked_against(vecs, cent)
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "embedding", "centroid_id")
+        .join(F.broadcast(sub), "centroid_id", "left")
+        .select("vec_id", "embedding", "centroid_id", "sub_id", s_sim.alias("s_sim"))
+        .withColumn("rn2", F.row_number().over(w_vec))
+        .filter(F.col("rn2") == 1)
+        .select(
+            "vec_id",
+            "embedding",
+            "centroid_id",
+            F.coalesce(F.col("sub_id"), F.lit(0)).cast("int").alias("sub_id"),
+        )
+    )
+
+
+FLAT = Layout(
+    quantizers=("centroids",),
+    vectors="vectors",
+    lookup="lookup",
+    partition_cols=("centroid_id",),
+    cell_cols=("centroid_id",),
+    train=_train_flat,
+    assign=_assign_flat,
+    path_fmt="ivf_{tag}/{role}_lloyd1_c{k}",
+)
+IVFPQ = Layout(
+    quantizers=("codebook", "centroids"),
+    vectors="vectors_ivfpq",
+    lookup="lookup",
+    partition_cols=("centroid_id",),
+    cell_cols=("centroid_id",),
+    train=_train_ivfpq,
+    assign=_assign_ivfpq,
+    path_fmt="ivfpq_{tag}/{role}_lloyd1_c{k}_m{pq_m}_k{pq_k}",
+)
+IVF2 = Layout(
+    quantizers=("coarse", "fine"),
+    vectors="vectors_ivf2",
+    lookup="lookup_ivf2",
+    partition_cols=("coarse_id", "centroid_id"),
+    cell_cols=("centroid_id",),
+    train=_train_ivf2,
+    assign=_assign_ivf2,
+    path_fmt="ivf2_{tag}/{role}_lloyd1_c{k}_g{kc}",
+)
+SPLIT = Layout(
+    quantizers=("centroids", "sub_centroids"),
+    vectors="vectors_split",
+    lookup="lookup_split",
+    partition_cols=("centroid_id", "sub_id"),
+    cell_cols=("centroid_id", "sub_id"),
+    train=_train_split,
+    assign=_assign_split,
+    # beside the flat indexes; the serve index is role "" (split_lloyd1_c…)
+    path_fmt="ivf_{tag}/split{role}_lloyd1_c{k}",
+)
+LAYOUTS = (FLAT, IVFPQ, IVF2, SPLIT)
+
+
+def index_layout(spark: SparkSession, path: str, memo: dict | None) -> Layout:
+    """The Layout of the index at ``path``, found from the quantizer tables
+    every build writes first: each layout's set is distinct (flat:
+    centroids; IVFPQ: codebook + centroids; two-level: coarse + fine;
+    split: centroids + sub_centroids). One Hadoop-FS listing — any scheme,
+    no Spark job. A single-owner ``memo`` (see _memo_read) keeps the
+    answer under the index path: a layout never changes under its
+    owner."""
+    from ..operators import fsutil
+
+    if memo is not None and path in memo:
+        return memo[path]
+    known = {q for layout in LAYOUTS for q in layout.quantizers}
+    found = set(fsutil.child_names(spark, path)) & known
+    for layout in LAYOUTS:
+        if found == set(layout.quantizers):
+            if memo is not None:
+                memo[path] = layout
+            return layout
+    raise FileNotFoundError(
+        f"{path} is not an ANN index: quantizer tables {sorted(found)} match no layout"
+    )
+
+
+def _ivf_index_path(layout: Layout, sf_dir: str, k: int, role: str) -> str:
+    """``role``'s index directory under spark-warehouse. The build
+    recipe is part of the identity: a different derived k (and the
+    two-level coarse count from it), trainer (the r8 lloyd1 flip minted
+    that tag), PQ shape or any future assignment constant must produce a
+    NEW index directory, never silently serve one built under the old
+    recipe."""
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    warehouse = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "spark-warehouse"
+    )
+    return os.path.join(
+        warehouse,
+        layout.path_fmt.format(
+            tag=tag, role=role, k=k, kc=coarse_centroid_count(k), pq_m=PQ_M, pq_k=PQ_K
+        ),
+    )
+
+
+def _index_is_fresh(layout: Layout, path: str, sf_dir: str, marker: str | None) -> bool:
+    """The materialize-once gate of every lifecycle key. The _SUCCESS
+    markers alone are not enough: a regenerated corpus under the same
+    sf_dir would keep serving a stale index (the oracle replays from the
+    fresh parquet — a hash-mismatch at best, silently wrong neighbors at
+    worst). So every table of the layout — an interrupted build can leave
+    the quantizers without vectors/ — must be newer than every source file
+    (io.materialization_is_fresh). A fixture that runs ops after its build
+    also names a completion ``marker``, written after its last op, that
+    must be newer than the sources too: the build's own _SUCCESS must not
+    pass for a crashed build-without-add. The recipe constants are covered
+    by the recipe-tagged path."""
+    from ..io import materialization_is_fresh
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    if not all(
+        materialization_is_fresh(os.path.join(path, d), src)
+        for d in ("vectors", *layout.quantizers)
+    ):
+        return False
+    if marker is None:
+        return True
+    marker = os.path.join(path, marker)
+    if not os.path.exists(marker):
+        return False
+    built = os.path.getmtime(marker)
+    paths = [os.path.join(src, f) for f in os.listdir(src)] if os.path.isdir(src) else [src]
+    return all(os.path.getmtime(p) <= built for p in paths if os.path.exists(p))
+
+
+def _materialized(
+    layout: Layout, sf_dir: str, k: int, role: str, marker: str | None, steps
+) -> str:
+    """The fixture helper behind every lifecycle key: ``role``'s
+    recipe-tagged index directory, materialized ONCE per corpus —
+    ``steps(path)`` (the build, then the key's ops) runs only when the
+    freshness gate fails, and the completion ``marker`` follows it."""
+    path = _ivf_index_path(layout, sf_dir, k, role)
+    if not _index_is_fresh(layout, path, sf_dir, marker):
+        steps(path)
+        if marker is not None:
+            open(os.path.join(path, marker), "w").close()
+    return path
+
+
+def _row_cols(layout: Layout) -> tuple[str, ...]:
+    """A lifecycle key's output columns: vec_id, centroid_id, the layout's
+    other partition column, and (block, code) for the PQ codes."""
+    keys = tuple(c for c in layout.partition_cols if c != "centroid_id")
+    codes = ("block", "code") if layout is IVFPQ else ()
+    return ("vec_id", "centroid_id", *keys, *codes)
+
+
+def _empty_rows(spark: SparkSession, layout: Layout) -> DataFrame:
+    return spark.createDataFrame([], ", ".join(f"{c} bigint" for c in _row_cols(layout)))
+
+
+def _index_rows(
+    spark: SparkSession, layout: Layout, path: str, table: str = "vectors"
+) -> DataFrame:
+    """A lifecycle key's result: the post-op ``table`` (vectors or lookup)
+    read back from disk as bigint _row_cols — an IVFPQ index's codes
+    array exploded to (block, code)."""
+    kind = layout.vectors if table == "vectors" else layout.lookup
+    df = _layout_read(spark, os.path.join(path, table), kind)
+    if layout is IVFPQ:
+        df = df.select("vec_id", "centroid_id", F.posexplode("codes").alias("block", "code"))
+    return df.select(*[F.col(c).cast("bigint").alias(c) for c in _row_cols(layout)])
+
+
+def _is_add() -> Column:
+    """The drift fixture's arriving batch: vec_id ≡ 7 (mod 8) — ~12.5% of
+    the corpus, deterministic on both engines (INCR_BATCH_MOD)."""
+    return F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
+
+
+def _takedown(vecs: DataFrame) -> DataFrame:
+    """The delete keys' takedown set: vec_id ≡ DEL_REM (mod DEL_MOD)."""
+    return vecs.filter(F.pmod(F.col("vec_id"), F.lit(DEL_MOD)) == DEL_REM).select("vec_id")
+
+
+def _fixture_k(layout: Layout, vecs: DataFrame) -> int:
+    """auto-k of the slice a layout's trainer fits its centroids on (one
+    count job) — the split trainer fits the base (non-add) part of its
+    corpus, every other trainer the whole frame; 0 when that slice is
+    empty (no standing corpus → nothing to train, and writing the empty
+    layout would leave an unreadable footerless vectors/ directory)."""
+    n = (vecs.filter(~_is_add()) if layout is SPLIT else vecs).count()
+    return auto_centroids(n) if n else 0
+
+
+def _incremental_add_key(
+    spark: SparkSession, sf_dir: str, layout: Layout, held: Column
+) -> DataFrame:
+    """ann_*incremental_add: build the standing index without the ``held``
+    slice, fold the slice in as an arriving batch against the frozen
+    quantizers, return the post-add index read back from disk."""
+    vecs = _vectors(spark, sf_dir)
+    standing = vecs.filter(~held)
+    k = _fixture_k(layout, standing)
+    if not k:
+        return _empty_rows(spark, layout)
+
+    def steps(path: str) -> None:
+        layout.build(standing, path, k)
+        ivf_index_incremental_add(spark, path, vecs.filter(held))
+
+    path = _materialized(layout, sf_dir, k, "incr", "_INCR_SUCCESS", steps)
+    return _index_rows(spark, layout, path)
+
+
+def _delete_key(spark: SparkSession, sf_dir: str, layout: Layout, lookup: bool) -> DataFrame:
+    """ann_*index_delete[_lookup]: build over the full corpus and remove the
+    takedown set. With ``lookup`` the victims are LOCATED through the
+    id→partition lookup's bucket-pruned point read (never the index), the
+    delete skips its own scan, only the deleted ids' lookup buckets are
+    refreshed, and the key returns the post-delete LOOKUP; otherwise the
+    post-delete vectors table."""
+    from ..operators.ann_lookup import build_lookup, locate, refresh_lookup_buckets
+
+    vecs = _vectors(spark, sf_dir)
+    k = _fixture_k(layout, vecs)
+    if not k:
+        return _empty_rows(spark, layout)
+    dels = _takedown(vecs)
+
+    def steps(path: str) -> None:
+        layout.build(vecs, path, k)
+        if not lookup:
+            ivf_index_delete(spark, path, dels)
+            return
+        build_lookup(spark, path)
+        cols = layout.partition_cols
+        touched = sorted(
+            tuple(r[c] for c in cols)
+            for r in locate(spark, path, dels).select(*cols).distinct().collect()
+        )
+        ivf_index_delete(spark, path, dels, touched=touched)
+        refresh_lookup_buckets(spark, path, dels)
+
+    role, marker = ("dellk", "_DELLK_SUCCESS") if lookup else ("del", "_DEL_SUCCESS")
+    path = _materialized(layout, sf_dir, k, role, marker, steps)
+    return _index_rows(spark, layout, path, "lookup" if lookup else "vectors")
+
+
+def _compact_key(spark: SparkSession, sf_dir: str, layout: Layout, lookup: bool) -> DataFrame:
+    """ann_*index_compact / ann_lookup_compact: build from the base slice,
+    fragment with TWO incremental adds (the add batch split mod 16, so
+    every touched partition gains two append files), then compact. With
+    ``lookup`` a lookup is maintained through the adds (a bucket refresh
+    after EACH — the fragmenting workload) and the LOOKUP is compacted and
+    returned; otherwise the vectors table."""
+    from ..operators.ann_lookup import build_lookup, compact_lookup, refresh_lookup_buckets
+    from ..operators.compaction import compact_partitions
+
+    vecs = _vectors(spark, sf_dir)
+    base, batch = vecs.filter(~_is_add()), vecs.filter(_is_add())
+    k = _fixture_k(layout, base)
+    if not k:
+        return _empty_rows(spark, layout)
+
+    def steps(path: str) -> None:
+        layout.build(base, path, k)
+        if lookup:
+            build_lookup(spark, path)
+        half = F.pmod(F.col("vec_id"), F.lit(2 * INCR_BATCH_MOD))
+        for rem in (INCR_BATCH_MOD - 1, 2 * INCR_BATCH_MOD - 1):
+            piece = batch.filter(half == rem)
+            ivf_index_incremental_add(spark, path, piece)
+            if lookup:
+                refresh_lookup_buckets(spark, path, piece.select("vec_id"))
+        if lookup:
+            compact_lookup(spark, path)
+        else:
+            compact_partitions(spark, os.path.join(path, "vectors"), layout.partition_cols)
+
+    role, marker = ("lkcompact", "_LKCOMPACT_SUCCESS") if lookup else ("compact", "_COMPACT_SUCCESS")
+    path = _materialized(layout, sf_dir, k, role, marker, steps)
+    return _index_rows(spark, layout, path, "lookup" if lookup else "vectors")
+
+
+def _retrain_index(spark: SparkSession, sf_dir: str, layout: Layout, lookup: bool) -> str | None:
+    """The ann_*global_retrain fixture (None on an empty base slice): build
+    from the base slice, fold the add batch in against the frozen
+    quantizers (the drift fixture every decision key shares), maintain a
+    lookup when ``lookup``, then hand the REAL registered decision
+    (ann_retrain_decision) to ivf_global_retrain."""
+    from ..operators.ann_lookup import build_lookup
+
+    vecs = _vectors(spark, sf_dir)
+    base = vecs.filter(~_is_add())
+    k = _fixture_k(layout, base)
+    if not k:
+        return None
+
+    def steps(path: str) -> None:
+        layout.build(base, path, k)
+        ivf_index_incremental_add(spark, path, vecs.filter(_is_add()))
+        if lookup:
+            build_lookup(spark, path)
+        ivf_global_retrain(spark, path, ann_retrain_decision(spark, sf_dir))
+
+    return _materialized(layout, sf_dir, k, "gretrain", "_GR_SUCCESS", steps)
 
 
 def ivf_build_index(
     spark: SparkSession, sf_dir: str, path: str, n_centroids: int | None = None
 ) -> None:
-    """Materialize the IVF index the ivf_topk docstring promises at scale:
-
-    - ``centroids/``: the Lloyd-refined serving centroids (lloyd_centroids
-      — sample seed + one kmeans_step), written FIRST and read back so the
-      stored frame and the assignment below cannot disagree. Persisting
-      the trainer output is what makes serving and incremental adds
-      train-free: probes rank against the stored table, and a new batch
-      assigns against the SAME frozen centroids (ann_index_incremental_add)
-      instead of retraining — retraining on the union would move every
-      centroid and invalidate the existing partitions.
-    - ``vectors/``: the assigned table written ``partitionBy(centroid_id)``,
-      so a probe reads nprobe directories via partition pruning instead of
-      scanning the whole index (plan-asserted in tests/test_similarity.py).
-
-    Callers that already derived auto-k pass it so the build doesn't
-    re-count."""
-    ivf_build_index_frame(_vectors(spark, sf_dir), path, n_centroids)
+    """Materialize the flat IVF index the ivf_topk docstring promises at
+    scale, over the whole corpus (Layout.build: stored ``centroids/``,
+    then ``vectors/`` partitionBy(centroid_id)). Callers that already
+    derived auto-k pass it so the build doesn't re-count."""
+    FLAT.build(_vectors(spark, sf_dir), path, n_centroids)
 
 
 def ivf_build_index_frame(
     vecs: DataFrame, path: str, n_centroids: int | None = None,
     schema_memo: dict | None = None,
 ) -> None:
-    """ivf_build_index over an explicit (vec_id, embedding) frame — the
-    incremental-add key builds from its ``base`` slice through this.
-    ``schema_memo`` (see _memo_read) lets a caller that will keep folding
-    into this index reuse the read-back's inferred schema."""
-    import os
-
-    spark = vecs.sparkSession
-    cent = lloyd_centroids(vecs, n_centroids if n_centroids is not None
-                           else auto_centroids(vecs.count()))
-    cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    cent_r = _memo_read(spark, os.path.join(path, "centroids"), schema_memo)
-    assigned = _ranked_against(vecs, cent_r).filter(F.col("rn") == 1).select(
-        "vec_id", "embedding", "centroid_id"
-    )
-    assigned.write.partitionBy("centroid_id").mode("overwrite").parquet(
-        os.path.join(path, "vectors")
-    )
+    """The flat IVF index over an explicit (vec_id, embedding) frame —
+    FLAT.build; the other layouts build through their own record
+    (IVFPQ.build, IVF2.build, SPLIT.build)."""
+    FLAT.build(vecs, path, n_centroids, schema_memo)
 
 
 def ivf_index_incremental_add(
     spark: SparkSession, path: str, batch: DataFrame, skip_existing: bool = False,
     schema_memo: dict | None = None,
-) -> list[int]:
-    """Fold an arriving embedding batch into a materialized IVF index
-    WITHOUT retraining and WITHOUT touching existing data — the vector
-    twin of the partitioned-state merge (operators/partitioned_state.py)
-    and the answer to rebuild-on-stale being the only maintenance story:
+) -> list:
+    """Fold an arriving embedding batch into a materialized index of ANY
+    layout WITHOUT retraining and WITHOUT touching existing data — the
+    vector twin of the partitioned-state merge
+    (operators/partitioned_state.py) and the answer to rebuild-on-stale
+    being the only maintenance story:
 
-    - the batch is assigned against the STORED frozen ``centroids/`` table
-      (retraining on the union would move every centroid and invalidate
-      every existing partition — the index's identity IS its trained
-      centroids, so adds must freeze them);
-    - the assigned rows APPEND to ``vectors/`` partitioned by centroid_id:
-      only partitions that receive batch rows gain files, every other
-      partition stays byte-identical (tested), and the job shuffles the
-      BATCH, never the index.
+    - the batch is assigned against the layout's STORED frozen quantizers
+      (Layout.assign — retraining on the union would move every centroid
+      and invalidate every existing partition; the index's identity IS
+      its trained tables, so adds must freeze them);
+    - the assigned rows APPEND to ``vectors/`` under the layout's
+      partition key: only partitions that receive batch rows gain files,
+      every other partition stays byte-identical (tested), and the job
+      shuffles the BATCH, never the index.
 
     Cost at 100 TB: one broadcast assignment over the batch plus k' ≤
     |batch| partition appends — the ingest cost tracks the changeset, not
@@ -835,32 +1292,32 @@ def ivf_index_incremental_add(
     partition-pruned fraction the batch maps to, never the whole index).
     Streaming ingest (streaming/ann_ingest.py) always sets it.
 
-    Returns the touched centroid ids. ``schema_memo`` (see _memo_read)
-    lets a single-owner fold loop skip per-trigger schema inference."""
-    import os
+    Returns the touched cells (Layout.cell_cols — scalars for one column,
+    tuples otherwise). ``schema_memo`` (see _memo_read) lets a
+    single-owner fold loop skip per-trigger schema inference."""
+    from ..operators.compaction import keys_filter
 
-    cent_r = _memo_read(spark, os.path.join(path, "centroids"), schema_memo)
+    layout = index_layout(spark, path, schema_memo)
+    cols = layout.cell_cols
     # one assignment job feeds every use below (_collect_touched)
     assigned, touched = _collect_touched(
-        _ranked_against(batch, cent_r)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "centroid_id"),
-        "centroid_id",
+        layout.assign(spark, path, batch, schema_memo), *cols
     )
     if skip_existing and touched:
         # no broadcast hint: the anti-join's build side is the touched
         # partitions' vec_id column (column-pruned scan), whose size scales
         # with the index fraction the batch maps to — AQE promotes it when
         # small and keeps a shuffled join when not
+        keys = touched if len(cols) > 1 else [(c,) for c in touched]
         existing = (
-            _memo_read(spark, os.path.join(path, "vectors"), schema_memo)
-            .filter(F.col("centroid_id").isin(touched))
+            _index_read(spark, os.path.join(path, "vectors"), layout.vectors, schema_memo)
+            .filter(keys_filter(cols, keys))
             .select("vec_id")
         )
         out = assigned.join(existing, "vec_id", "left_anti")
     else:
         out = assigned
-    out.write.mode("append").partitionBy("centroid_id").parquet(
+    out.write.mode("append").partitionBy(*layout.partition_cols).parquet(
         os.path.join(path, "vectors")
     )
     return touched
@@ -877,13 +1334,13 @@ def ivf_index_delete(
     spark: SparkSession,
     path: str,
     delete_ids: DataFrame,
-    partition_cols: tuple[str, ...] = ("centroid_id",),
     touched: list | None = None,
     schema_memo: dict | None = None,
     n_ids_hint: int | None = None,
 ) -> list:
-    """Remove vectors from a materialized IVF index by id — the lifecycle
-    op incremental_add is missing (takedown / right-to-be-forgotten: at
+    """Remove vectors from a materialized index of any layout by id — the
+    lifecycle op incremental_add is missing (takedown /
+    right-to-be-forgotten: at
     100 TB you are handed vec_ids, not embeddings, and a full index
     rebuild per deletion request is exactly the cost model adds were
     built to avoid). Partition-scoped like the add:
@@ -914,11 +1371,11 @@ def ivf_index_delete(
     the index's identity is its trained centroids; deletions thin cells,
     they don't move them — ann_retrain_decision prices when thinning
     warrants a retrain). Idempotent: re-deleting the same ids finds no
-    victims and writes nothing. ``partition_cols`` names the layout's
-    partition key — ("centroid_id",) for flat IVF/IVFPQ,
-    ("coarse_id", "centroid_id") for the nested two-level layout (empty
-    parent trees are pruned after a leaf sweep). ``touched`` skips the
-    LOCATE scan entirely when the caller already knows the victim
+    victims and writes nothing. The layout's partition key comes from
+    the index itself (index_layout) — ("coarse_id", "centroid_id") for
+    the nested two-level layout, whose empty parent trees are pruned
+    after a leaf sweep. ``touched`` skips the LOCATE scan entirely when
+    the caller already knows the victim
     partitions — the id→centroid lookup table's point read
     (operators/ann_lookup.locate) supplies exactly this, turning the
     delete's one whole-index touch into a bucket-pruned read (the
@@ -927,15 +1384,15 @@ def ivf_index_delete(
     already knows one (the apply-log fold counts its ops in one fused
     aggregate) — it replaces the bounded broadcast probe job, never the
     correctness of the join (an oversized hint only forfeits the
-    broadcast). Returns the touched centroid ids (key tuples for
-    multi-column layouts)."""
-    import functools as ft
-    import os
-
+    broadcast). Returns the touched partition keys (scalars for a
+    one-column key, tuples otherwise)."""
     from ..operators import fsutil
+    from ..operators.compaction import keys_filter
 
+    layout = index_layout(spark, path, schema_memo)
+    partition_cols = layout.partition_cols
     vec_dir = os.path.join(path, "vectors")
-    idx = _memo_read(spark, vec_dir, schema_memo)
+    idx = _index_read(spark, vec_dir, layout.vectors, schema_memo)
     # One materialization (changeset-sized by contract) serves the probe,
     # the locate scan and the rewrite anti-join — without it the
     # delete_ids lineage is fully evaluated three times per call, and in
@@ -985,30 +1442,17 @@ def ivf_index_delete(
     if not touched:
         return []
 
-    def _keys_filter(keys):
-        # OR-of-AND literals on the partition columns — planning-time
-        # partition pruning (a semi-join would locate the same rows but
-        # open every directory); changeset-sized by construction
-        return ft.reduce(
-            lambda a, b: a | b,
-            [
-                ft.reduce(
-                    lambda x, y: x & y,
-                    [F.col(c) == F.lit(v) for c, v in zip(partition_cols, key)],
-                )
-                for key in keys
-            ],
-        )
-
     # no projection: the rewrite is layout-agnostic (the IVFPQ vectors
-    # table carries its codes column through unchanged; the two-level
-    # layout passes partition_cols=("coarse_id", "centroid_id")), so one
-    # delete implementation serves every partitioned index layout.
+    # table carries its codes column through unchanged), so one delete
+    # implementation serves every partitioned index layout. The keys
+    # filter is planning-time partition pruning (a semi-join would locate
+    # the same rows but open every directory); changeset-sized by
+    # construction.
     # When the fused locate already proved EVERY touched partition fully
     # emptied, there is nothing to rewrite — skip straight to the sweep.
     if survivors is None or survivors:
         remaining = (
-            idx.filter(_keys_filter(touched))
+            idx.filter(keys_filter(partition_cols, touched))
             .join(delete_ids, "vec_id", "left_anti")
             .localCheckpoint(eager=True)
         )
@@ -1021,7 +1465,7 @@ def ivf_index_delete(
                 for r in remaining.select(*partition_cols).distinct().collect()
             }
     if survivors:
-        remaining.filter(_keys_filter(sorted(survivors))).write.mode(
+        remaining.filter(keys_filter(partition_cols, sorted(survivors))).write.mode(
             "overwrite"
         ).option("partitionOverwriteMode", "dynamic").partitionBy(
             *partition_cols
@@ -1046,14 +1490,6 @@ def ivf_index_delete(
 #: two lifecycle keys never share a slice.
 DEL_MOD = 16
 DEL_REM = 5
-
-
-def _ivf_del_index_path(sf_dir: str, k: int) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"del_lloyd1_c{k}"
-    )
 
 
 @register(
@@ -1091,29 +1527,7 @@ def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     Idempotent per sf_dir via the same freshness + completion-marker
     gate as the add key (_DEL_SUCCESS: the build's own _SUCCESS must not
     pass for the post-delete state)."""
-    import os
-
-    vecs = _vectors(spark, sf_dir)
-    n = vecs.count()
-    if n == 0:
-        return spark.createDataFrame([], "vec_id bigint, centroid_id bigint")
-    k = auto_centroids(n)
-    path = _ivf_del_index_path(sf_dir, k)
-    marker = os.path.join(path, "_DEL_SUCCESS")
-    if not (_ivf_index_is_fresh(path, sf_dir) and _incr_marker_fresh(marker, sf_dir)):
-        ivf_build_index_frame(vecs, path, n_centroids=k)
-        ivf_index_delete(
-            spark,
-            path,
-            vecs.filter(
-                F.pmod(F.col("vec_id"), F.lit(DEL_MOD)) == DEL_REM
-            ).select("vec_id"),
-        )
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors")
-    return idx.select(
-        "vec_id", F.col("centroid_id").cast("bigint").alias("centroid_id")
-    )
+    return _delete_key(spark, sf_dir, FLAT, lookup=False)
 
 
 @register(
@@ -1153,39 +1567,7 @@ def ann_index_delete_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-assignment-minus-deleted oracle proves the maintenance loop
     kept the derived table exactly consistent with the index it mirrors
     (a stale or over-swept bucket hash-mismatches here)."""
-    import os
-
-    from ..operators.ann_lookup import build_lookup, locate, refresh_lookup_buckets
-
-    vecs = _vectors(spark, sf_dir)
-    n = vecs.count()
-    if n == 0:
-        return spark.createDataFrame([], "vec_id bigint, centroid_id bigint")
-    k = auto_centroids(n)
-    path = os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"dellk_lloyd1_c{k}"
-    )
-    marker = os.path.join(path, "_DELLK_SUCCESS")
-    if not (_ivf_index_is_fresh(path, sf_dir) and _incr_marker_fresh(marker, sf_dir)):
-        ivf_build_index_frame(vecs, path, n_centroids=k)
-        build_lookup(spark, path)
-        dels = vecs.filter(
-            F.pmod(F.col("vec_id"), F.lit(DEL_MOD)) == DEL_REM
-        ).select("vec_id")
-        touched = sorted(
-            r["centroid_id"]
-            for r in locate(spark, path, dels)
-            .select("centroid_id")
-            .distinct()
-            .collect()
-        )
-        ivf_index_delete(spark, path, dels, touched=touched)
-        refresh_lookup_buckets(spark, path, dels)
-        open(marker, "w").close()
-    lk = _layout_read(spark, os.path.join(path, "lookup"), "lookup")
-    return lk.select(
-        "vec_id", F.col("centroid_id").cast("bigint").alias("centroid_id")
-    )
+    return _delete_key(spark, sf_dir, FLAT, lookup=True)
 
 
 def ivf_probe_index(
@@ -1196,11 +1578,15 @@ def ivf_probe_index(
     k: int = IVF_K,
     exclude_ids: tuple[int, ...] = (),
 ) -> DataFrame:
-    """Exact top-k inside the probed buckets of a materialized index. The
-    isin() filter on the partition column prunes at planning time — only
-    the probed directories are ever read. ``exclude_ids`` drops known ids
-    (typically the query vector itself) before the top-k."""
-    idx = _layout_read(spark, path, "vectors").filter(F.col("centroid_id").isin(probe_ids))
+    """Exact top-k inside the probed cells (``centroid_id``s) of the
+    vectors table at ``path``, for any layout. The isin() filter on the
+    partition column prunes at planning time — only the probed
+    directories are ever read. ``exclude_ids`` drops known ids (typically
+    the query vector itself) before the top-k."""
+    layout = index_layout(spark, os.path.dirname(os.path.normpath(path)), None)
+    idx = _layout_read(spark, path, layout.vectors).filter(
+        F.col("centroid_id").isin(probe_ids)
+    )
     if exclude_ids:
         idx = idx.filter(~F.col("vec_id").isin(list(exclude_ids)))
     q = F.array(*[F.lit(float(x)) for x in q_emb])
@@ -1371,44 +1757,12 @@ def kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("centroid_id", "pos", F.round("c_val", 6).alias("c_val"))
 
 
-def _ivf_index_path(sf_dir: str, k: int) -> str:
-    import os
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    warehouse = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "spark-warehouse"
-    )
-    # the builder recipe is part of the identity: a different derived k,
-    # trainer (the r8 lloyd1 flip minted this tag), or any future
-    # assignment constant must produce a NEW index directory, never
-    # silently serve one built under the old recipe
-    return os.path.join(warehouse, f"ivf_{tag}", f"index_lloyd1_c{k}")
-
-
-def _ivf_index_is_fresh(path: str, sf_dir: str) -> bool:
-    """The _SUCCESS marker alone is not enough: a regenerated corpus under
-    the same sf_dir would otherwise keep serving the stale index (the
-    oracle replays from the fresh parquet — driver hash-mismatch at best,
-    silently wrong neighbors at worst). Source-mtime check via
-    io.materialization_is_fresh on BOTH halves (an interrupted build can
-    leave centroids/ without vectors/); the recipe constants are covered
-    by the recipe-tagged path."""
-    import os
-
-    from ..io import materialization_is_fresh
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    return materialization_is_fresh(
-        os.path.join(path, "vectors"), src
-    ) and materialization_is_fresh(os.path.join(path, "centroids"), src)
-
-
 @register("ivf_index_probe", oracle=_ivf_oracle(1), tags=("ext-sim", "opt-partition-pruning"))
 def ivf_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized-index ANN path, driver-checked end to end:
     ivf_build_index writes the assigned table partitionBy(centroid_id)
     once per sf_dir (idempotent via _SUCCESS + source-mtime freshness +
-    a recipe-tagged path — see _ivf_index_is_fresh; the lake.py pattern
+    a recipe-tagged path — see _index_is_fresh; the lake.py pattern
     plus staleness guards), then ivf_probe_index answers the query by
     reading ONLY the probed centroid's directory — partition pruning at
     planning time, the plan shape asserted in tests/test_similarity.py.
@@ -1418,15 +1772,13 @@ def ivf_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRAIN-FREE: the probe ranks the query against the STORED centroids/
     table (centroid-count rows), so a serve run after the build touches
     no full-corpus stage at all."""
-    import os
-
     vecs = _vectors(spark, sf_dir)
     # derive auto-k ONCE: path identity, build, and probe assignment all
     # share it (three redundant count jobs otherwise)
     k_auto = auto_centroids(vecs.count())
-    path = _ivf_index_path(sf_dir, k_auto)
-    if not _ivf_index_is_fresh(path, sf_dir):
-        ivf_build_index(spark, sf_dir, path, n_centroids=k_auto)
+    path = _materialized(
+        FLAT, sf_dir, k_auto, "index", None, lambda p: FLAT.build(vecs, p, k_auto)
+    )
     # two driver-side scalars of control flow, not data: the query vector
     # and its probe bucket (both one-row lookups)
     q_row = vecs.filter(F.col("vec_id") == 0).select("embedding").head()
@@ -1450,29 +1802,6 @@ def ivf_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: The simulated arriving batch for the incremental-add key: every vec_id
 #: ≡ 7 (mod 8) — ~12.5% of the corpus, deterministic on both engines.
 INCR_BATCH_MOD = 8
-
-
-def _ivf_incr_index_path(sf_dir: str, k: int) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"incr_lloyd1_c{k}"
-    )
-
-
-def _incr_marker_fresh(marker: str, sf_dir: str) -> bool:
-    """True iff the add-completion marker exists and is newer than every
-    source file — the build writes vectors/_SUCCESS BEFORE the incremental
-    add runs, so _ivf_index_is_fresh alone would declare a crashed
-    build-without-add complete and serve an index missing the batch."""
-    import os
-
-    if not os.path.exists(marker):
-        return False
-    built = os.path.getmtime(marker)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    paths = [os.path.join(src, f) for f in os.listdir(src)] if os.path.isdir(src) else [src]
-    return all(os.path.getmtime(p) <= built for p in paths if os.path.exists(p))
 
 
 @register(
@@ -1519,29 +1848,7 @@ def ann_index_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated by source-mtime freshness PLUS an add-completion marker (the
     vectors/_SUCCESS written by the base build alone must not pass for
     the post-add state)."""
-    import os
-
-    vecs = _vectors(spark, sf_dir)
-    is_batch = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    base = vecs.filter(~is_batch)
-    batch = vecs.filter(is_batch)
-    n_base = base.count()
-    if n_base == 0:
-        # no standing corpus → nothing to train, nothing to index (the
-        # oracle's empty-c1 chain returns the same zero rows); writing the
-        # empty layout would leave an unreadable footerless vectors/ dir
-        return spark.createDataFrame([], "vec_id bigint, centroid_id bigint")
-    k = auto_centroids(n_base)
-    path = _ivf_incr_index_path(sf_dir, k)
-    marker = os.path.join(path, "_INCR_SUCCESS")
-    if not (_ivf_index_is_fresh(path, sf_dir) and _incr_marker_fresh(marker, sf_dir)):
-        ivf_build_index_frame(base, path, n_centroids=k)
-        ivf_index_incremental_add(spark, path, batch)
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors")
-    return idx.select(
-        "vec_id", F.col("centroid_id").cast("bigint").alias("centroid_id")
-    )
+    return _incremental_add_key(spark, sf_dir, FLAT, _is_add())
 
 
 @register(
@@ -1585,35 +1892,7 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     row hash-mismatches here.
 
     Idempotent per sf_dir via the usual freshness + completion marker."""
-    import os
-
-    vecs = _vectors(spark, sf_dir)
-    is_batch = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    base = vecs.filter(~is_batch)
-    n_base = base.count()
-    if n_base == 0:
-        return spark.createDataFrame([], "vec_id bigint, centroid_id bigint")
-    k = auto_centroids(n_base)
-    path = os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"compact_lloyd1_c{k}"
-    )
-    marker = os.path.join(path, "_COMPACT_SUCCESS")
-    if not (_ivf_index_is_fresh(path, sf_dir) and _incr_marker_fresh(marker, sf_dir)):
-        from ..operators.compaction import compact_partitions
-
-        ivf_build_index_frame(base, path, n_centroids=k)
-        half = F.pmod(F.col("vec_id"), F.lit(2 * INCR_BATCH_MOD))
-        batch = vecs.filter(is_batch)
-        ivf_index_incremental_add(spark, path, batch.filter(half == INCR_BATCH_MOD - 1))
-        ivf_index_incremental_add(
-            spark, path, batch.filter(half == 2 * INCR_BATCH_MOD - 1)
-        )
-        compact_partitions(spark, os.path.join(path, "vectors"))
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors")
-    return idx.select(
-        "vec_id", F.col("centroid_id").cast("bigint").alias("centroid_id")
-    )
+    return _compact_key(spark, sf_dir, FLAT, lookup=False)
 
 
 @register(
@@ -1656,36 +1935,7 @@ def ann_lookup_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly (a compact that dropped a bucket's rows, or a refresh that
     left one stale, hash-mismatches). File-census shrink and healthy-
     bucket byte-identity are pinned in tests/test_compaction.py."""
-    import os
-
-    from ..operators.ann_lookup import build_lookup, compact_lookup, refresh_lookup_buckets
-
-    vecs = _vectors(spark, sf_dir)
-    is_batch = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    base = vecs.filter(~is_batch)
-    n_base = base.count()
-    if n_base == 0:
-        return spark.createDataFrame([], "vec_id bigint, centroid_id bigint")
-    k = auto_centroids(n_base)
-    path = os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"lkcompact_lloyd1_c{k}"
-    )
-    marker = os.path.join(path, "_LKCOMPACT_SUCCESS")
-    if not (_ivf_index_is_fresh(path, sf_dir) and _incr_marker_fresh(marker, sf_dir)):
-        ivf_build_index_frame(base, path, n_centroids=k)
-        build_lookup(spark, path)
-        half = F.pmod(F.col("vec_id"), F.lit(2 * INCR_BATCH_MOD))
-        batch = vecs.filter(is_batch)
-        for rem in (INCR_BATCH_MOD - 1, 2 * INCR_BATCH_MOD - 1):
-            piece = batch.filter(half == rem)
-            ivf_index_incremental_add(spark, path, piece)
-            refresh_lookup_buckets(spark, path, piece.select("vec_id"))
-        compact_lookup(spark, path)
-        open(marker, "w").close()
-    lk = _layout_read(spark, os.path.join(path, "lookup"), "lookup")
-    return lk.select(
-        "vec_id", F.col("centroid_id").cast("bigint").alias("centroid_id")
-    )
+    return _compact_key(spark, sf_dir, FLAT, lookup=True)
 
 
 @register("ann_ivf_topk_nprobe2", oracle=_ivf_oracle(2), tags=("ext-sim",))
@@ -2327,134 +2577,6 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _adc_shortlist_rerank(vecs, sub, cb, codes_in)
 
 
-def _ivfpq_index_path(sf_dir: str, k: int) -> str:
-    """Recipe-tagged IVFPQ index directory (see _ivf_index_path: any
-    change to the assignment or codebook constants must mint a NEW
-    directory, never silently serve a stale recipe)."""
-    import os
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    warehouse = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "spark-warehouse"
-    )
-    return os.path.join(
-        warehouse, f"ivfpq_{tag}", f"index_lloyd1_c{k}_m{PQ_M}_k{PQ_K}"
-    )
-
-
-def ivfpq_build_index(
-    spark: SparkSession, sf_dir: str, path: str, n_centroids: int | None = None
-) -> None:
-    """Materialize the full IVFPQ index — what ann_ivfpq_topk's docstring
-    promises is precomputable, written once so serving never trains:
-
-    - ``codebook/``: (block, cid, c_sub) — the trained PQ codebook,
-      PQ_M·PQ_K rows (dimension-sized; read whole at serve time).
-    - ``centroids/``: the Lloyd-refined coarse quantizer (lloyd_centroids
-      — sample seed + one kmeans_step, the recipe ann_recall_lloyd prices)
-      — stored so serving AND incremental adds rank against the frozen
-      trained frame instead of retraining.
-    - ``vectors/``: (vec_id, embedding, codes array<int> in block order),
-      written partitionBy(centroid_id) — a probe reads nprobe
-      DIRECTORIES via partition pruning. Codes ride NEXT TO the floats in
-      the same row so the ADC scan and the shortlist re-rank both come
-      from the probed partitions (at 100 TB the codes column is
-      PQ_M·log₂PQ_K bits/vector and parquet column pruning means the ADC
-      pass never decodes the float column).
-
-    The codebook is written FIRST so an interrupted build can never leave
-    a vectors/_SUCCESS without its codebook; freshness is checked on both
-    (see _ivfpq_index_is_fresh)."""
-    ivfpq_build_index_frame(_vectors(spark, sf_dir), path, n_centroids)
-
-
-def ivfpq_build_index_frame(
-    vecs: DataFrame, path: str, n_centroids: int | None = None
-) -> None:
-    """ivfpq_build_index over an explicit (vec_id, embedding) frame — the
-    incremental-add key builds from its ``base`` slice through this."""
-    import os
-
-    spark = vecs.sparkSession
-    sub = _pq_subvectors(vecs).persist()
-    sub.count()
-    cb = _pq_codebook(sub)
-    cb.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-    cb_r = _layout_read(spark, os.path.join(path, "codebook"), "codebook")
-    codes_arr = (
-        _pq_assign(sub, cb_r)
-        .groupBy("vec_id")
-        .agg(F.array_sort(F.collect_list(F.struct("block", "code"))).alias("bc"))
-        .select("vec_id", F.transform("bc", lambda s: s["code"]).alias("codes"))
-    )
-    cent = lloyd_centroids(
-        vecs, n_centroids if n_centroids is not None else auto_centroids(vecs.count())
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    cent_r = _layout_read(spark, os.path.join(path, "centroids"), "centroids")
-    assigned = _ranked_against(vecs, cent_r).filter(F.col("rn") == 1).select(
-        "vec_id", "embedding", "centroid_id"
-    )
-    assigned.join(codes_arr, "vec_id").write.partitionBy("centroid_id").mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "vectors"))
-    sub.unpersist()
-
-
-def ivfpq_index_incremental_add(
-    spark: SparkSession, path: str, batch: DataFrame, skip_existing: bool = False,
-    schema_memo: dict | None = None,
-) -> list[int]:
-    """Fold an embedding batch into a materialized IVFPQ index with BOTH
-    trained artifacts frozen: the batch's PQ codes come from the STORED
-    codebook (retraining it would silently re-mean every existing code's
-    reconstruction), its coarse assignment from the STORED centroids, and
-    the joined rows APPEND to the touched centroid partitions — the
-    ivf_index_incremental_add contract extended to the compressed index.
-    ``skip_existing`` gives the same replay idempotency (anti-join against
-    the touched partitions only). Returns the touched centroid ids."""
-    import os
-
-    cb_r = _memo_read(spark, os.path.join(path, "codebook"), schema_memo)
-    cent_r = _memo_read(spark, os.path.join(path, "centroids"), schema_memo)
-    codes_arr = (
-        _pq_assign(_pq_subvectors(batch), cb_r)
-        .groupBy("vec_id")
-        .agg(F.array_sort(F.collect_list(F.struct("block", "code"))).alias("bc"))
-        .select("vec_id", F.transform("bc", lambda s: s["code"]).alias("codes"))
-    )
-    # one assignment job feeds every use below (_collect_touched)
-    assigned, touched = _collect_touched(
-        _ranked_against(batch, cent_r)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "centroid_id")
-        .join(codes_arr, "vec_id"),
-        "centroid_id",
-    )
-    if skip_existing and touched:
-        existing = (
-            _memo_read(spark, os.path.join(path, "vectors"), schema_memo)
-            .filter(F.col("centroid_id").isin(touched))
-            .select("vec_id")
-        )
-        out = assigned.join(existing, "vec_id", "left_anti")
-    else:
-        out = assigned
-    out.write.mode("append").partitionBy("centroid_id").parquet(
-        os.path.join(path, "vectors")
-    )
-    return touched
-
-
-def _ivfpq_incr_index_path(sf_dir: str, k: int) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(_ivfpq_index_path(sf_dir, k)),
-        f"incr_lloyd1_c{k}_m{PQ_M}_k{PQ_K}",
-    )
-
-
 @register(
     "ann_ivfpq_incremental_add",
     oracle=f"""
@@ -2500,7 +2622,7 @@ def ann_ivfpq_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance for the COMPRESSED index, driver-checked:
     build the IVFPQ index from the base slice (codebook + coarse
     centroids trained there, both stored), fold the arriving ~12.5% in
-    via ivfpq_index_incremental_add — codes from the frozen codebook,
+    via ivf_index_incremental_add — codes from the frozen codebook,
     cells from the frozen centroids, partition-scoped append — and return
     the full post-add index exploded to (vec_id, centroid_id, block,
     code). The oracle is the rebuild-equivalence statement with BOTH
@@ -2512,44 +2634,7 @@ def ann_ivfpq_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same idempotency recipe as the IVF twin (source-mtime freshness + an
     add-completion marker)."""
-    import os
-
-    vecs = _vectors(spark, sf_dir)
-    is_batch = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    base = vecs.filter(~is_batch)
-    batch = vecs.filter(is_batch)
-    n_base = base.count()
-    if n_base == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, block bigint, code bigint"
-        )
-    k = auto_centroids(n_base)
-    path = _ivfpq_incr_index_path(sf_dir, k)
-    marker = os.path.join(path, "_INCR_SUCCESS")
-    if not (_ivfpq_index_is_fresh(path, sf_dir) and _incr_marker_fresh(marker, sf_dir)):
-        ivfpq_build_index_frame(base, path, n_centroids=k)
-        ivfpq_index_incremental_add(spark, path, batch)
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors_ivfpq")
-    return idx.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.posexplode("codes").alias("block", "code"),
-    ).select(
-        "vec_id",
-        "centroid_id",
-        F.col("block").cast("bigint").alias("block"),
-        F.col("code").cast("bigint").alias("code"),
-    )
-
-
-def _ivfpq_del_index_path(sf_dir: str, k: int) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(_ivfpq_index_path(sf_dir, k)),
-        f"del_lloyd1_c{k}_m{PQ_M}_k{PQ_K}",
-    )
+    return _incremental_add_key(spark, sf_dir, IVFPQ, _is_add())
 
 
 @register(
@@ -2602,51 +2687,7 @@ def ann_ivfpq_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle is the full train/encode/assign chain minus the
     deleted ids — the deletion-equivalence twin of the add key's
     rebuild equivalence."""
-    import os
-
-    vecs = _vectors(spark, sf_dir)
-    n = vecs.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, block bigint, code bigint"
-        )
-    k = auto_centroids(n)
-    path = _ivfpq_del_index_path(sf_dir, k)
-    marker = os.path.join(path, "_DEL_SUCCESS")
-    if not (_ivfpq_index_is_fresh(path, sf_dir) and _incr_marker_fresh(marker, sf_dir)):
-        ivfpq_build_index_frame(vecs, path, n_centroids=k)
-        ivf_index_delete(
-            spark,
-            path,
-            vecs.filter(
-                F.pmod(F.col("vec_id"), F.lit(DEL_MOD)) == DEL_REM
-            ).select("vec_id"),
-        )
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors_ivfpq")
-    return idx.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.posexplode("codes").alias("block", "code"),
-    ).select(
-        "vec_id",
-        "centroid_id",
-        F.col("block").cast("bigint").alias("block"),
-        F.col("code").cast("bigint").alias("code"),
-    )
-
-
-def _ivfpq_index_is_fresh(path: str, sf_dir: str) -> bool:
-    import os
-
-    from ..io import materialization_is_fresh
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    return (
-        materialization_is_fresh(os.path.join(path, "vectors"), src)
-        and materialization_is_fresh(os.path.join(path, "codebook"), src)
-        and materialization_is_fresh(os.path.join(path, "centroids"), src)
-    )
+    return _delete_key(spark, sf_dir, IVFPQ, lookup=False)
 
 
 @register(
@@ -2656,7 +2697,7 @@ def _ivfpq_index_is_fresh(path: str, sf_dir: str) -> bool:
 )
 def ann_ivfpq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The build-once/probe-cheap IVFPQ path, driver-checked end to end:
-    ivfpq_build_index writes the bucket-partitioned codes+floats and the
+    IVFPQ.build writes the bucket-partitioned codes+floats and the
     trained codebook once per sf_dir (idempotent: _SUCCESS + source-mtime
     freshness + recipe-tagged path); serving then touches NO full-corpus
     stage and trains NOTHING —
@@ -2677,15 +2718,13 @@ def ann_ivfpq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME replay (_IVFPQ_ORACLE) — the driver hash-check proves the
     materialized index serves identical results to the in-query
     composition."""
-    import os
-
     vecs = _vectors(spark, sf_dir)
     # derive auto-k ONCE: path identity, build, and probe assignment all
     # share it (three redundant count jobs otherwise)
     k_auto = auto_centroids(vecs.count())
-    path = _ivfpq_index_path(sf_dir, k_auto)
-    if not _ivfpq_index_is_fresh(path, sf_dir):
-        ivfpq_build_index(spark, sf_dir, path, n_centroids=k_auto)
+    path = _materialized(
+        IVFPQ, sf_dir, k_auto, "index", None, lambda p: IVFPQ.build(vecs, p, k_auto)
+    )
     q_row = vecs.filter(F.col("vec_id") == 0).select("embedding").head()
     if q_row is None:
         return spark.createDataFrame([], "vec_id bigint, l2_dist double")
@@ -3825,7 +3864,11 @@ def ivf_global_retrain(
     staging directory, atomically swap it in, and rebuild the id→centroid
     lookup beside it if one is maintained (every assignment may move under
     new centroids, so a bucket-scoped refresh has no advantage — the
-    rebuild IS the changeset). Returns True iff the retrain ran.
+    rebuild IS the changeset). Every layout retrains the same way:
+    Layout.build over the index's current vectors, so the two-level index
+    retrains BOTH quantizer levels (fine over the corpus, coarse over the
+    new fine table — the build's recipe, replayable by the oracle).
+    Returns True iff the retrain ran.
 
     Swap sequence and crash states (directory rename is the atomic
     publish primitive on HDFS; operators/fsutil.rename):
@@ -3854,8 +3897,6 @@ def ivf_global_retrain(
     price BEFORE paying: the decision gates it on measured drift, and
     everything cheaper (add/delete/compact/split) has already been tried
     by the time the verdict flips."""
-    import os
-
     from ..operators import fsutil
     from ..operators.ann_lookup import build_lookup
 
@@ -3867,14 +3908,15 @@ def ivf_global_retrain(
     row = decision.select("index_retrain").first()
     if row is None or not row["index_retrain"]:
         return False
+    layout = index_layout(spark, index_path, None)
     fsutil.delete_dir(spark, staging, if_exists=True)
     fsutil.delete_dir(spark, retired, if_exists=True)
     cur = (
-        _layout_read(spark, os.path.join(index_path, "vectors"), "vectors")
+        _layout_read(spark, os.path.join(index_path, "vectors"), layout.vectors)
         .select("vec_id", "embedding")
         .localCheckpoint(eager=True)  # lineage must not point at dirs the swap moves
     )
-    ivf_build_index_frame(cur, staging, n_centroids=auto_centroids(cur.count()))
+    layout.build(cur, staging)
     if fsutil.exists(spark, os.path.join(index_path, "lookup")):
         build_lookup(spark, staging)
     fsutil.rename(spark, index_path, retired)
@@ -3971,31 +4013,10 @@ def ann_global_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches. The post-swap index must equal a from-scratch build
     of the current content exactly (rebuild equivalence — same trainer,
     same auto-k)."""
-    import os
-
-    vecs = _vectors(spark, sf_dir)
-    is_add = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    base = vecs.filter(~is_add)
-    n_base = base.count()
-    if n_base == 0:
-        return spark.createDataFrame([], "vec_id bigint, centroid_id bigint")
-    k = auto_centroids(n_base)
-    path = os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"gretrain_lloyd1_c{k}"
-    )
-    marker = os.path.join(path, "_GR_SUCCESS")
-    if not (_ivf_index_is_fresh(path, sf_dir) and _incr_marker_fresh(marker, sf_dir)):
-        from ..operators.ann_lookup import build_lookup
-
-        ivf_build_index_frame(base, path, n_centroids=k)
-        ivf_index_incremental_add(spark, path, vecs.filter(is_add))
-        build_lookup(spark, path)
-        ivf_global_retrain(spark, path, ann_retrain_decision(spark, sf_dir))
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors")
-    return idx.select(
-        "vec_id", F.col("centroid_id").cast("bigint").alias("centroid_id")
-    )
+    path = _retrain_index(spark, sf_dir, FLAT, lookup=True)
+    if path is None:
+        return _empty_rows(spark, FLAT)
+    return _index_rows(spark, FLAT, path)
 
 
 @register(
@@ -4112,21 +4133,11 @@ def ann_retrain_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a half-published staging dir, or an unrefreshed assignment
     hash-mismatches. With ann_global_retrain hashing the swapped index
     itself, the pair proves publish + serve agree end to end."""
-    import os
-
     vecs = _vectors(spark, sf_dir)
-    is_add = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    n_base = vecs.filter(~is_add).count()
-    if n_base == 0:
-        return spark.createDataFrame([], "vec_id bigint, sim double")
     # ensure the decision->retrain->swap fixture (idempotent per sf_dir)
-    ann_global_retrain(spark, sf_dir)
-    k = auto_centroids(n_base)
-    path = os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"gretrain_lloyd1_c{k}"
-    )
+    path = _retrain_index(spark, sf_dir, FLAT, lookup=True)
     q_row = vecs.filter(F.col("vec_id") == 0).select("embedding").head()
-    if q_row is None:
+    if path is None or q_row is None:
         return spark.createDataFrame([], "vec_id bigint, sim double")
     cent_r = _layout_read(spark, os.path.join(path, "centroids"), "centroids")
     q = F.broadcast(
@@ -4308,7 +4319,7 @@ def ann_cell_split_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-seeds plus one decimal-exact mean over (cell, sub, dim) groups —
     all changeset-fraction-sized; the unflagged corpus is never
     reshuffled (left joins against centroid-count frames)."""
-    state = _split_state(spark, sf_dir)
+    state = _split_state(_vectors(spark, sf_dir))
     if state is None:
         return spark.createDataFrame(
             [], "vec_id bigint, centroid_id bigint, sub_id int, was_split boolean"
@@ -4327,24 +4338,24 @@ def ann_cell_split_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _split_state(spark: SparkSession, sf_dir: str, vec_pred=None):
+def _split_state(vecs: DataFrame, k: int | None = None):
     """The selective-split computation shared by ann_cell_split_retrain
-    and the materialized split-index build: (cent base-trained centroids,
-    assigned, flagged, sc1 refined sub-centroids, split_final
-    sub-assignment), or None on an empty corpus. ``assigned`` is
-    persisted (decision + members + the callers' stitches all read
-    it). ``vec_pred`` (a Column predicate) restricts the corpus the
-    state is computed over — the split-layout add key holds a slice out
-    of the build this way (oracle twin: _split_ctes(where=...))."""
-    vecs = _vectors(spark, sf_dir)
-    if vec_pred is not None:
-        vecs = vecs.filter(vec_pred)
-    is_add = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
+    and the split layout's trainer over a (vec_id, embedding) frame:
+    (cent base-trained centroids, assigned, flagged, sc1 refined
+    sub-centroids, split_final sub-assignment), or None on an empty base
+    slice. ``assigned`` is persisted (decision + members + the callers'
+    stitches all read it). ``k`` is the base slice's auto-k when the
+    caller already derived it. A caller that holds a slice out of the
+    build passes the filtered frame (oracle twin:
+    _split_ctes(where=...))."""
+    is_add = _is_add()
     base = vecs.filter(~is_add)
-    n_base = base.count()
-    if n_base == 0:
-        return None
-    cent = lloyd_centroids(base, auto_centroids(n_base))
+    if k is None:
+        n_base = base.count()
+        if n_base == 0:
+            return None
+        k = auto_centroids(n_base)
+    cent = lloyd_centroids(base, k)
     assigned = (
         _ranked_against(vecs, cent)
         .filter(F.col("rn") == 1)
@@ -4415,54 +4426,6 @@ def _split_state(spark: SparkSession, sf_dir: str, vec_pred=None):
     return cent, assigned, flagged, sc1, split_final
 
 
-def _split_index_path(sf_dir: str, k: int) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"split_lloyd1_c{k}"
-    )
-
-
-def split_build_index(spark: SparkSession, sf_dir: str, path: str, vec_pred=None) -> None:
-    """Materialize the post-split layout ann_cell_split_retrain computes:
-
-    - ``centroids/``: the base-trained coarse centroids (probe level 1);
-    - ``sub_centroids/``: the refined per-cell sub-centroids of the split
-      cells only (probe level 2 — empty-of-a-cell means the cell was
-      healthy and serves whole);
-    - ``vectors/``: every vector written partitionBy(centroid_id, sub_id)
-      — healthy cells land in sub_id=0, split cells in their sub-cell —
-      so a probe prunes to ONE (cell, sub-cell) directory.
-
-    Quantizer tables write FIRST (the codebook-first rationale).
-    ``vec_pred`` restricts the indexed corpus (see _split_state)."""
-    import os
-
-    state = _split_state(spark, sf_dir, vec_pred)
-    if state is None:
-        raise ValueError("empty corpus: nothing to index")
-    cent, assigned, _flagged, sc1, split_final = state
-    cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    sc1.write.mode("overwrite").parquet(os.path.join(path, "sub_centroids"))
-    post = (
-        assigned.join(split_final, ["vec_id", "centroid_id"], "left")
-        .select(
-            "vec_id",
-            "embedding",
-            "centroid_id",
-            F.coalesce(F.col("sub_id"), F.lit(0)).cast("int").alias("sub_id"),
-        )
-    )
-    post.write.partitionBy("centroid_id", "sub_id").mode("overwrite").parquet(
-        os.path.join(path, "vectors")
-    )
-    # every consumer of the persisted assignment materialized in the
-    # three writes above — holding the cache past the build is the same
-    # leak class the tfidf dispatch fix closed (the retrain KEY keeps its
-    # cache because its consumers materialize after it returns)
-    assigned.unpersist()
-
-
 @register(
     "ann_split_index_serve",
     oracle=f"""
@@ -4502,7 +4465,7 @@ def split_build_index(spark: SparkSession, sf_dir: str, path: str, vec_pred=None
 )
 def ann_split_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving THROUGH the split (the round's lifecycle, closed at the
-    probe): split_build_index materializes ann_cell_split_retrain's
+    probe): SPLIT.build materializes ann_cell_split_retrain's
     layout — vectors partitioned by (centroid_id, sub_id), the base
     centroids and the split cells' refined sub-centroids stored beside
     them — and the probe cascades: rank the query against the stored
@@ -4517,23 +4480,11 @@ def ann_split_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid-count tables plus one pruned directory; the oracle replays
     the full split chain and states the served result equals the
     in-memory cascade exactly."""
-    import os
-
     vecs = _vectors(spark, sf_dir)
-    n = vecs.count()
-    if n == 0:
+    k = _fixture_k(SPLIT, vecs)
+    if not k:
         return spark.createDataFrame([], "vec_id bigint, sim double")
-    is_add = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    k = auto_centroids(vecs.filter(~is_add).count())
-    path = _split_index_path(sf_dir, k)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    from ..io import materialization_is_fresh
-
-    if not all(
-        materialization_is_fresh(os.path.join(path, d), src)
-        for d in ("vectors", "centroids", "sub_centroids")
-    ):
-        split_build_index(spark, sf_dir, path)
+    path = _materialized(SPLIT, sf_dir, k, "", None, lambda p: SPLIT.build(vecs, p, k))
     q_row = vecs.filter(F.col("vec_id") == 0).select("embedding").head()
     if q_row is None:
         return spark.createDataFrame([], "vec_id bigint, sim double")
@@ -4574,75 +4525,6 @@ def ann_split_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def split_index_incremental_add(
-    spark: SparkSession, path: str, batch: DataFrame, skip_existing: bool = False,
-    schema_memo: dict | None = None,
-) -> list[tuple]:
-    """Fold an arriving embedding batch into the materialized SPLIT
-    layout — the add path ann_cell_split_retrain's output was missing
-    (without it the split index is build-once/serve-only and every batch
-    after a split forces a rebuild). Two-stage assignment against BOTH
-    stored frozen quantizer levels:
-
-    - stage 1: nearest stored coarse centroid (``centroids/`` — same
-      frozen-quantizer invariant as every add here);
-    - stage 2: iff that cell was split (has rows in ``sub_centroids/``),
-      nearest of its two stored sub-centroids — tie-broken exactly like
-      the serve cascade (s_sim desc, sub_id); healthy cells take
-      sub_id=0.
-
-    The assigned batch APPENDS into ``vectors/`` partitioned by
-    (centroid_id, sub_id): only partitions receiving batch rows gain
-    files, everything else stays byte-identical (tested), and the job
-    shuffles the BATCH, never the index. ``skip_existing`` replays
-    idempotently by anti-joining the touched partitions' vec_ids (the
-    foreachBatch retry contract, same as the flat add). Returns the
-    touched (centroid_id, sub_id) keys."""
-    import os
-
-    cent_r = _memo_read(spark, os.path.join(path, "centroids"), schema_memo)
-    sub_r = _memo_read(spark, os.path.join(path, "sub_centroids"), schema_memo)
-    a1 = (
-        _ranked_against(batch, cent_r)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "centroid_id")
-    )
-    s_sim = F.round(cosine(F.col("embedding"), F.col("s_emb")), 9)
-    w_vec = Window.partitionBy("vec_id").orderBy(
-        F.col("s_sim").desc_nulls_last(), F.col("sub_id")
-    )
-    # one assignment job feeds every use below (_collect_touched)
-    assigned, touched = _collect_touched(
-        a1.join(F.broadcast(sub_r), "centroid_id", "left")
-        .select("vec_id", "embedding", "centroid_id", "sub_id", s_sim.alias("s_sim"))
-        .withColumn("rn2", F.row_number().over(w_vec))
-        .filter(F.col("rn2") == 1)
-        .select(
-            "vec_id",
-            "embedding",
-            "centroid_id",
-            F.coalesce(F.col("sub_id"), F.lit(0)).cast("int").alias("sub_id"),
-        ),
-        "centroid_id",
-        "sub_id",
-    )
-    if skip_existing and touched:
-        from ..operators.compaction import keys_filter
-
-        existing = (
-            _memo_read(spark, os.path.join(path, "vectors"), schema_memo)
-            .filter(keys_filter(("centroid_id", "sub_id"), touched))
-            .select("vec_id")
-        )
-        out = assigned.join(existing, "vec_id", "left_anti")
-    else:
-        out = assigned
-    out.write.mode("append").partitionBy("centroid_id", "sub_id").parquet(
-        os.path.join(path, "vectors")
-    )
-    return touched
-
-
 #: The split-add key's holdout slice: vec_id ≡ 11 (mod 16) — disjoint
 #: from the split state's internal base/add classes (7, 15 mod 16) and
 #: from the delete keys' takedown class (5 mod 16).
@@ -4650,7 +4532,7 @@ SPLIT_ADD_MOD = 16
 SPLIT_ADD_REM = 11
 
 #: Two-stage batch assignment against the frozen split quantizers — the
-#: SQL twin of split_index_incremental_add, spliced after _split_ctes().
+#: SQL twin of the split layout's Layout.assign, spliced after _split_ctes().
 _SPLIT_BATCH_ASSIGN_SQL = f"""
         b1 AS (
             SELECT vec_id, emb, centroid_id FROM (
@@ -4703,7 +4585,7 @@ _SPLIT_BATCH_ASSIGN_SQL = f"""
 def ann_split_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental add ON THE SPLIT LAYOUT, driver-checked end to end:
     build the split index holding out vec_id ≡ 11 (mod 16), then fold
-    the holdout in via split_index_incremental_add — two-stage
+    the holdout in via ivf_index_incremental_add — two-stage
     assignment against the stored frozen coarse + sub-centroid tables,
     partition-scoped append into (centroid_id, sub_id) directories.
 
@@ -4713,41 +4595,8 @@ def ann_split_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     against those frozen quantizers — the rebuild-equivalence property,
     now on the richest layout (it holds only because BOTH quantizer
     levels freeze through adds)."""
-    import os
-
-    vecs = _vectors(spark, sf_dir)
-    hold = F.pmod(F.col("vec_id"), F.lit(SPLIT_ADD_MOD)) == SPLIT_ADD_REM
-    standing = vecs.filter(~hold)
-    is_add = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    n_base = standing.filter(~is_add).count()
-    if n_base == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, sub_id bigint"
-        )
-    k = auto_centroids(n_base)
-    path = os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"splitincr_lloyd1_c{k}"
-    )
-    marker = os.path.join(path, "_INCR_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    from ..io import materialization_is_fresh
-
-    if not (
-        all(
-            materialization_is_fresh(os.path.join(path, d), src)
-            for d in ("vectors", "centroids", "sub_centroids")
-        )
-        and _incr_marker_fresh(marker, sf_dir)
-    ):
-        split_build_index(spark, sf_dir, path, vec_pred=~hold)
-        split_index_incremental_add(spark, path, vecs.filter(hold))
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors_split")
-    return idx.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.col("sub_id").cast("bigint").alias("sub_id"),
-    )
+    held = F.pmod(F.col("vec_id"), F.lit(SPLIT_ADD_MOD)) == SPLIT_ADD_REM
+    return _incremental_add_key(spark, sf_dir, SPLIT, held)
 
 
 @register(
@@ -4769,52 +4618,13 @@ def ann_split_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_split_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Takedown ON THE SPLIT LAYOUT — the last cell of the deletion
     matrix (flat IVF / IVFPQ / two-level / split): the SAME generic
-    ivf_index_delete drives it with partition_cols=("centroid_id",
-    "sub_id"), locating victims under the two-column keys, rewriting
+    ivf_index_delete drives it on the layout's (centroid_id, sub_id)
+    partition key, locating victims under the two-column keys, rewriting
     only those nested directories, sweeping emptied leaves with their
     hollowed parents through the Hadoop FS helpers. Both quantizer
     levels stay frozen; the oracle is the full split chain minus the
     deleted ids (vec_id ≡ 5 mod 16 — the shared takedown class)."""
-    import os
-
-    vecs = _vectors(spark, sf_dir)
-    n = vecs.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, sub_id bigint"
-        )
-    is_add = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    k = auto_centroids(vecs.filter(~is_add).count())
-    path = os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"splitdel_lloyd1_c{k}"
-    )
-    marker = os.path.join(path, "_DEL_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    from ..io import materialization_is_fresh
-
-    if not (
-        all(
-            materialization_is_fresh(os.path.join(path, d), src)
-            for d in ("vectors", "centroids", "sub_centroids")
-        )
-        and _incr_marker_fresh(marker, sf_dir)
-    ):
-        split_build_index(spark, sf_dir, path)
-        ivf_index_delete(
-            spark,
-            path,
-            vecs.filter(F.pmod(F.col("vec_id"), F.lit(DEL_MOD)) == DEL_REM).select(
-                "vec_id"
-            ),
-            partition_cols=("centroid_id", "sub_id"),
-        )
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors_split")
-    return idx.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.col("sub_id").cast("bigint").alias("sub_id"),
-    )
+    return _delete_key(spark, sf_dir, SPLIT, lookup=False)
 
 
 @register(
@@ -4843,55 +4653,7 @@ def ann_split_index_delete_lookup(spark: SparkSession, sf_dir: str) -> DataFrame
     The returned frame is the post-delete LOOKUP read back from disk,
     hashed against the split chain minus the takedown class — consistency
     of the derived table with the richest layout, driver-checked."""
-    import os
-
-    from ..io import materialization_is_fresh
-    from ..operators.ann_lookup import build_lookup, locate, refresh_lookup_buckets
-
-    cols = ("centroid_id", "sub_id")
-    vecs = _vectors(spark, sf_dir)
-    n = vecs.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, sub_id bigint"
-        )
-    is_add = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    k = auto_centroids(vecs.filter(~is_add).count())
-    path = os.path.join(
-        os.path.dirname(_ivf_index_path(sf_dir, k)), f"splitdellk_lloyd1_c{k}"
-    )
-    marker = os.path.join(path, "_DELLK_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    if not (
-        all(
-            materialization_is_fresh(os.path.join(path, d), src)
-            for d in ("vectors", "centroids", "sub_centroids")
-        )
-        and _incr_marker_fresh(marker, sf_dir)
-    ):
-        split_build_index(spark, sf_dir, path)
-        build_lookup(spark, path, partition_cols=cols)
-        dels = vecs.filter(
-            F.pmod(F.col("vec_id"), F.lit(DEL_MOD)) == DEL_REM
-        ).select("vec_id")
-        touched = sorted(
-            (r["centroid_id"], r["sub_id"])
-            for r in locate(spark, path, dels, partition_cols=cols)
-            .select(*cols)
-            .distinct()
-            .collect()
-        )
-        ivf_index_delete(
-            spark, path, dels, partition_cols=cols, touched=touched
-        )
-        refresh_lookup_buckets(spark, path, dels, partition_cols=cols)
-        open(marker, "w").close()
-    lk = _layout_read(spark, os.path.join(path, "lookup"), "lookup_split")
-    return lk.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.col("sub_id").cast("bigint").alias("sub_id"),
-    )
+    return _delete_key(spark, sf_dir, SPLIT, lookup=True)
 
 
 # --- Embedding/PQ quality metrics --------------------------------------------
@@ -5385,21 +5147,43 @@ def coarse_centroid_count(k: int) -> int:
     return min(IVF2_MAX_KC, max(IVF2_MIN_KC, k // IVF2_COARSE_BUCKET))
 
 
-def ivf2_centroids(vecs: DataFrame, k: int, kc: int) -> tuple[DataFrame, DataFrame]:
+def ivf2_centroids(vecs: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
     """(fine, coarse) for the two-level index, BOTH Lloyd-trained (r8):
-    fine = lloyd_centroids over the corpus; coarse = lloyd_centroids over
-    the fine centroid TABLE (centroids re-labeled as vectors — the coarse
-    quantizer summarizes the fine one, which is the quantity it prunes).
+    fine = lloyd_centroids over the corpus (k cells); coarse =
+    lloyd_centroids over the fine centroid TABLE at
+    coarse_centroid_count(k) cells (centroids re-labeled as vectors — the
+    coarse quantizer summarizes the fine one, which is the quantity it
+    prunes).
     Returns (centroid_id, c_emb) and (coarse_id, g_emb) frames; the
     oracles replay both trainings as two spliced _lloyd_chain_sql chains."""
     fine = lloyd_centroids(vecs, k)
     fine_as_vecs = fine.select(
         F.col("centroid_id").alias("vec_id"), F.col("c_emb").alias("embedding")
     )
-    coarse = lloyd_centroids(fine_as_vecs, kc).select(
+    coarse = lloyd_centroids(fine_as_vecs, coarse_centroid_count(k)).select(
         F.col("centroid_id").alias("coarse_id"), F.col("c_emb").alias("g_emb")
     )
     return fine, coarse
+
+
+def _fine_to_coarse(fine: DataFrame, coarse: DataFrame) -> DataFrame:
+    """(centroid_id, c_emb, coarse_id): each fine centroid with its
+    nearest coarse cell (round-9 cosine argmax, coarse-id tie-break) —
+    the f2c mapping the two-level probe cascade and the stored ``fine/``
+    table share."""
+    wf = Window.partitionBy("centroid_id").orderBy(F.col("cs").desc(), F.col("coarse_id"))
+    return (
+        fine.crossJoin(F.broadcast(coarse))
+        .select(
+            "centroid_id",
+            "c_emb",
+            "coarse_id",
+            F.round(cosine(F.col("c_emb"), F.col("g_emb")), 9).alias("cs"),
+        )
+        .withColumn("rn", F.row_number().over(wf))
+        .filter(F.col("rn") == 1)
+        .select("centroid_id", "c_emb", "coarse_id")
+    )
 
 
 def _ivf2_chain_sql(src: str = "vecs", prefix: str = "") -> str:
@@ -5499,21 +5283,8 @@ def ann_ivf2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     65k, and the scan still reads only nprobe fine directories."""
     vecs = _vectors(spark, sf_dir)
     k = auto_centroids(vecs.count())
-    kc = coarse_centroid_count(k)
-    fine, coarse = ivf2_centroids(vecs, k, kc)
-    wf = Window.partitionBy("centroid_id").orderBy(F.col("cs").desc(), F.col("coarse_id"))
-    f2c = (
-        fine.crossJoin(F.broadcast(coarse))
-        .select(
-            "centroid_id",
-            "c_emb",
-            "coarse_id",
-            F.round(cosine(F.col("c_emb"), F.col("g_emb")), 9).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select("centroid_id", "c_emb", "coarse_id")
-    )
+    fine, coarse = ivf2_centroids(vecs, k)
+    f2c = _fine_to_coarse(fine, coarse)
     q = F.broadcast(vecs.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb")))
     probes_c = F.broadcast(
         coarse.crossJoin(q)
@@ -5543,128 +5314,6 @@ def ann_ivf2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", sim.alias("sim"))
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(IVF_K)
-    )
-
-
-def _ivf2_index_path(sf_dir: str, k: int, kc: int) -> str:
-    import os
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    warehouse = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "spark-warehouse"
-    )
-    # recipe-tagged (the _ivf_index_path identity rule): both level sizes
-    # AND the trainer are part of the layout; either changing must produce
-    # a new index (lloyd1 minted by the r8 trainer flip)
-    return os.path.join(warehouse, f"ivf2_{tag}", f"index_lloyd1_c{k}_g{kc}")
-
-
-def ivf2_build_index(
-    spark: SparkSession, sf_dir: str, path: str, k: int, kc: int
-) -> None:
-    """Materialize the two-level index:
-
-    - ``fine/``: the Lloyd-trained fine centroids WITH their coarse cell
-      (centroid_id, c_emb, coarse_id) — stored so serving ranks the query
-      against centroid-count tables instead of retraining (the one-level
-      centroids/ pattern, plus the f2c mapping folded in);
-    - ``coarse/``: the Lloyd-trained coarse quantizer (trained on the fine
-      table — see ivf2_centroids);
-    - ``vectors/``: every vector with its fine cell AND its fine cell's
-      coarse cell, written partitionBy(coarse_id, centroid_id) — the
-      nested directory layout where a probe prunes whole coarse trees
-      before fine ones.
-
-    Levels write FIRST so an interrupted build can't leave vectors/ with
-    no quantizer tables (the codebook-first rationale)."""
-    ivf2_build_index_frame(_vectors(spark, sf_dir), path, k, kc)
-
-
-def ivf2_build_index_frame(
-    vecs: DataFrame, path: str, k: int, kc: int, schema_memo: dict | None = None
-) -> None:
-    """ivf2_build_index over an explicit (vec_id, embedding) frame — the
-    incremental-add key builds from its ``base`` slice through this.
-    ``schema_memo`` (see _memo_read) lets a caller that will keep folding
-    into this index reuse the read-backs' inferred schemas."""
-    import os
-
-    spark = vecs.sparkSession
-    fine, coarse = ivf2_centroids(vecs, k, kc)
-    coarse.write.mode("overwrite").parquet(os.path.join(path, "coarse"))
-    coarse_r = _memo_read(spark, os.path.join(path, "coarse"), schema_memo)
-    wf = Window.partitionBy("centroid_id").orderBy(F.col("cs").desc(), F.col("coarse_id"))
-    f2c = (
-        fine.crossJoin(F.broadcast(coarse_r))
-        .select(
-            "centroid_id",
-            "c_emb",
-            "coarse_id",
-            F.round(cosine(F.col("c_emb"), F.col("g_emb")), 9).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select("centroid_id", "c_emb", "coarse_id")
-    )
-    f2c.write.mode("overwrite").parquet(os.path.join(path, "fine"))
-    fine_r = _memo_read(spark, os.path.join(path, "fine"), schema_memo)
-    assigned = (
-        _ranked_against(vecs, fine_r.select("centroid_id", "c_emb"))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "centroid_id")
-    )
-    (
-        assigned.join(
-            F.broadcast(fine_r.select("centroid_id", "coarse_id")), "centroid_id"
-        )
-        .write.partitionBy("coarse_id", "centroid_id")
-        .mode("overwrite")
-        .parquet(os.path.join(path, "vectors"))
-    )
-
-
-def ivf2_index_incremental_add(
-    spark: SparkSession, path: str, batch: DataFrame, skip_existing: bool = False,
-    schema_memo: dict | None = None,
-) -> list[int]:
-    """Fold an embedding batch into a materialized TWO-LEVEL index: assign
-    the batch against the STORED fine centroids (the stored fine/ table
-    already carries each fine cell's coarse_id, so the nested partition
-    key comes for free — no coarse-level work at all), append to the
-    touched (coarse_id, centroid_id) directories. Same frozen-artifact /
-    byte-identical-untouched-partitions / replay-idempotency contract as
-    the one-level and IVFPQ adds. Returns touched fine centroid ids."""
-    import os
-
-    fine_r = _memo_read(spark, os.path.join(path, "fine"), schema_memo)
-    # one assignment job feeds every use below (_collect_touched)
-    assigned, touched = _collect_touched(
-        _ranked_against(batch, fine_r.select("centroid_id", "c_emb"))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "centroid_id")
-        .join(F.broadcast(fine_r.select("centroid_id", "coarse_id")), "centroid_id"),
-        "centroid_id",
-    )
-    if skip_existing and touched:
-        existing = (
-            _memo_read(spark, os.path.join(path, "vectors"), schema_memo)
-            .filter(F.col("centroid_id").isin(touched))
-            .select("vec_id")
-        )
-        out = assigned.join(existing, "vec_id", "left_anti")
-    else:
-        out = assigned
-    out.write.mode("append").partitionBy("coarse_id", "centroid_id").parquet(
-        os.path.join(path, "vectors")
-    )
-    return touched
-
-
-def _ivf2_incr_index_path(sf_dir: str, k: int, kc: int) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(_ivf2_index_path(sf_dir, k, kc)), f"incr_lloyd1_c{k}_g{kc}"
     )
 
 
@@ -5709,7 +5358,7 @@ def ann_ivf2_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance for the TWO-LEVEL index, driver-checked:
     build the nested layout from the base slice (both quantizer levels
     Lloyd-trained there and stored), fold the arriving ~12.5% in via
-    ivf2_index_incremental_add — the stored fine/ table carries each fine
+    ivf_index_incremental_add — the stored fine/ table carries each fine
     cell's coarse_id, so the add is ONE broadcast assignment against the
     fine centroids plus a partition-scoped append into the nested
     directories; the coarse level does zero work per batch. Returns the
@@ -5721,38 +5370,7 @@ def ann_ivf2_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine serves (flat IVF, IVFPQ, two-level IVF) now has a
     batch-shaped add, so rebuild-on-stale is a quality policy everywhere
     (ann_index_drift_report's call), never a correctness requirement."""
-    import os
-
-    from ..io import materialization_is_fresh
-
-    vecs = _vectors(spark, sf_dir)
-    is_batch = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    base = vecs.filter(~is_batch)
-    batch = vecs.filter(is_batch)
-    n_base = base.count()
-    if n_base == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, coarse_id bigint"
-        )
-    k = auto_centroids(n_base)
-    kc = coarse_centroid_count(k)
-    path = _ivf2_incr_index_path(sf_dir, k, kc)
-    marker = os.path.join(path, "_INCR_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    fresh = all(
-        materialization_is_fresh(os.path.join(path, d), src)
-        for d in ("vectors", "fine", "coarse")
-    ) and _incr_marker_fresh(marker, sf_dir)
-    if not fresh:
-        ivf2_build_index_frame(base, path, k, kc)
-        ivf2_index_incremental_add(spark, path, batch)
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors_ivf2")
-    return idx.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.col("coarse_id").cast("bigint").alias("coarse_id"),
-    )
+    return _incremental_add_key(spark, sf_dir, IVF2, _is_add())
 
 
 @register(
@@ -5805,62 +5423,7 @@ def ann_ivf2_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_compaction.py pins the two-column mechanics on the split
     layout). Oracle = the ivf2 rebuild-equivalence chain: compaction
     must change file boundaries and nothing else."""
-    import os
-
-    from ..io import materialization_is_fresh
-
-    vecs = _vectors(spark, sf_dir)
-    is_batch = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    base = vecs.filter(~is_batch)
-    n_base = base.count()
-    if n_base == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, coarse_id bigint"
-        )
-    k = auto_centroids(n_base)
-    kc = coarse_centroid_count(k)
-    path = os.path.join(
-        os.path.dirname(_ivf2_index_path(sf_dir, k, kc)),
-        f"compact_lloyd1_c{k}_g{kc}",
-    )
-    marker = os.path.join(path, "_COMPACT_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    fresh = all(
-        materialization_is_fresh(os.path.join(path, d), src)
-        for d in ("vectors", "fine", "coarse")
-    ) and _incr_marker_fresh(marker, sf_dir)
-    if not fresh:
-        from ..operators.compaction import compact_partitions
-
-        ivf2_build_index_frame(base, path, k, kc)
-        half = F.pmod(F.col("vec_id"), F.lit(2 * INCR_BATCH_MOD))
-        batch = vecs.filter(is_batch)
-        ivf2_index_incremental_add(
-            spark, path, batch.filter(half == INCR_BATCH_MOD - 1)
-        )
-        ivf2_index_incremental_add(
-            spark, path, batch.filter(half == 2 * INCR_BATCH_MOD - 1)
-        )
-        compact_partitions(
-            spark,
-            os.path.join(path, "vectors"),
-            ("coarse_id", "centroid_id"),
-        )
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors_ivf2")
-    return idx.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.col("coarse_id").cast("bigint").alias("coarse_id"),
-    )
-
-
-def _ivf2_del_index_path(sf_dir: str, k: int, kc: int) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(_ivf2_index_path(sf_dir, k, kc)), f"del_lloyd1_c{k}_g{kc}"
-    )
+    return _compact_key(spark, sf_dir, IVF2, lookup=False)
 
 
 @register(
@@ -5909,42 +5472,7 @@ def ann_ivf2_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten, fully-emptied leaves swept WITH their emptied parent
     trees. Both quantizer levels stay frozen; the oracle is the full
     two-level train/assign chain minus the deleted ids."""
-    import os
-
-    from ..io import materialization_is_fresh
-
-    vecs = _vectors(spark, sf_dir)
-    n = vecs.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, coarse_id bigint"
-        )
-    k = auto_centroids(n)
-    kc = coarse_centroid_count(k)
-    path = _ivf2_del_index_path(sf_dir, k, kc)
-    marker = os.path.join(path, "_DEL_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    fresh = all(
-        materialization_is_fresh(os.path.join(path, d), src)
-        for d in ("vectors", "fine", "coarse")
-    ) and _incr_marker_fresh(marker, sf_dir)
-    if not fresh:
-        ivf2_build_index_frame(vecs, path, k, kc)
-        ivf_index_delete(
-            spark,
-            path,
-            vecs.filter(
-                F.pmod(F.col("vec_id"), F.lit(DEL_MOD)) == DEL_REM
-            ).select("vec_id"),
-            partition_cols=("coarse_id", "centroid_id"),
-        )
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors_ivf2")
-    return idx.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.col("coarse_id").cast("bigint").alias("coarse_id"),
-    )
+    return _delete_key(spark, sf_dir, IVF2, lookup=False)
 
 
 @register(
@@ -5997,96 +5525,7 @@ def ann_ivf2_index_delete_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the derived table stayed exactly consistent with the nested
     index through locate → delete → refresh (a lookup missing coarse_id,
     or a stale/over-swept bucket, hash-mismatches here)."""
-    import os
-
-    from ..io import materialization_is_fresh
-    from ..operators.ann_lookup import build_lookup, locate, refresh_lookup_buckets
-
-    cols = ("coarse_id", "centroid_id")
-    vecs = _vectors(spark, sf_dir)
-    n = vecs.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, coarse_id bigint"
-        )
-    k = auto_centroids(n)
-    kc = coarse_centroid_count(k)
-    path = os.path.join(
-        os.path.dirname(_ivf2_index_path(sf_dir, k, kc)), f"dellk_lloyd1_c{k}_g{kc}"
-    )
-    marker = os.path.join(path, "_DELLK_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    fresh = all(
-        materialization_is_fresh(os.path.join(path, d), src)
-        for d in ("vectors", "fine", "coarse")
-    ) and _incr_marker_fresh(marker, sf_dir)
-    if not fresh:
-        ivf2_build_index_frame(vecs, path, k, kc)
-        build_lookup(spark, path, partition_cols=cols)
-        dels = vecs.filter(
-            F.pmod(F.col("vec_id"), F.lit(DEL_MOD)) == DEL_REM
-        ).select("vec_id")
-        touched = sorted(
-            (r["coarse_id"], r["centroid_id"])
-            for r in locate(spark, path, dels, partition_cols=cols)
-            .select(*cols)
-            .distinct()
-            .collect()
-        )
-        ivf_index_delete(
-            spark, path, dels, partition_cols=cols, touched=touched
-        )
-        refresh_lookup_buckets(spark, path, dels, partition_cols=cols)
-        open(marker, "w").close()
-    lk = _layout_read(spark, os.path.join(path, "lookup"), "lookup_ivf2")
-    return lk.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.col("coarse_id").cast("bigint").alias("coarse_id"),
-    )
-
-
-def ivf2_global_retrain(
-    spark: SparkSession, index_path: str, decision: DataFrame
-) -> bool:
-    """The TWO-LEVEL twin of ivf_global_retrain: when the whole-index
-    verdict fires, BOTH quantizer levels retrain on the index's current
-    content (fine = the deterministic Lloyd trainer over the corpus,
-    coarse = the same trainer over the new fine table — exactly the
-    build's recipe, so the oracle can replay it), staged rebuild, atomic
-    rename swap, and the id→partition lookup rebuilt with the nested key
-    if one is maintained. Same swap sequence and crash-state contract as
-    the flat consumer (every intermediate is a recoverable directory);
-    same single-writer expectation (run under the maintenance lease when
-    any other loop may be live). Returns True iff the retrain ran."""
-    import os
-
-    from ..operators import fsutil
-    from ..operators.ann_lookup import build_lookup
-
-    staging, retired = f"{index_path}__rebuild", f"{index_path}__retired"
-    # same crash-state contract as the flat consumer: complete an
-    # interrupted swap before sweeping, or the sweep deletes the only
-    # surviving complete copies
-    fsutil.recover_swap(spark, index_path, staging, retired)
-    row = decision.select("index_retrain").first()
-    if row is None or not row["index_retrain"]:
-        return False
-    fsutil.delete_dir(spark, staging, if_exists=True)
-    fsutil.delete_dir(spark, retired, if_exists=True)
-    cur = (
-        _layout_read(spark, os.path.join(index_path, "vectors"), "vectors_ivf2")
-        .select("vec_id", "embedding")
-        .localCheckpoint(eager=True)
-    )
-    k = auto_centroids(cur.count())
-    ivf2_build_index_frame(cur, staging, k, coarse_centroid_count(k))
-    if fsutil.exists(spark, os.path.join(index_path, "lookup")):
-        build_lookup(spark, staging, partition_cols=("coarse_id", "centroid_id"))
-    fsutil.rename(spark, index_path, retired)
-    fsutil.rename(spark, staging, index_path)
-    fsutil.delete_dir(spark, retired)
-    return True
+    return _delete_key(spark, sf_dir, IVF2, lookup=True)
 
 
 @register(
@@ -6190,47 +5629,17 @@ def ann_ivf2_global_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frozen fine table (the shared drift fixture — and the fine level
     IS the flat chain's c1, so ann_retrain_decision's measured verdict
     prices this index's fit exactly), then hand the decision to
-    ivf2_global_retrain: both quantizer levels retrained on current
+    ivf_global_retrain: both quantizer levels retrained on current
     content, staged rebuild, atomic swap. The returned frame is the
     post-swap nested index; the oracle replays BOTH two-level chains
     (base-trained and retrained-on-everything) and the drift verdict, and
     selects the branch the verdict dictates — a consumer that retrained
     only one level, ignored the verdict, or published a stale build
     hash-mismatches on either the fine or the coarse key."""
-    import os
-
-    from ..io import materialization_is_fresh
-
-    vecs = _vectors(spark, sf_dir)
-    is_add = F.pmod(F.col("vec_id"), F.lit(INCR_BATCH_MOD)) == INCR_BATCH_MOD - 1
-    base = vecs.filter(~is_add)
-    n_base = base.count()
-    if n_base == 0:
-        return spark.createDataFrame(
-            [], "vec_id bigint, centroid_id bigint, coarse_id bigint"
-        )
-    k = auto_centroids(n_base)
-    kc = coarse_centroid_count(k)
-    path = os.path.join(
-        os.path.dirname(_ivf2_index_path(sf_dir, k, kc)), f"gretrain_lloyd1_c{k}_g{kc}"
-    )
-    marker = os.path.join(path, "_GR_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    fresh = all(
-        materialization_is_fresh(os.path.join(path, d), src)
-        for d in ("vectors", "fine", "coarse")
-    ) and _incr_marker_fresh(marker, sf_dir)
-    if not fresh:
-        ivf2_build_index_frame(base, path, k, kc)
-        ivf2_index_incremental_add(spark, path, vecs.filter(is_add))
-        ivf2_global_retrain(spark, path, ann_retrain_decision(spark, sf_dir))
-        open(marker, "w").close()
-    idx = _layout_read(spark, os.path.join(path, "vectors"), "vectors_ivf2")
-    return idx.select(
-        "vec_id",
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        F.col("coarse_id").cast("bigint").alias("coarse_id"),
-    )
+    path = _retrain_index(spark, sf_dir, IVF2, lookup=False)
+    if path is None:
+        return _empty_rows(spark, IVF2)
+    return _index_rows(spark, IVF2, path)
 
 
 @register(
@@ -6240,7 +5649,7 @@ def ann_ivf2_global_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivf2_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The build-once/probe-cheap half of the two-level design: the index
-    from ivf2_build_index (partitionBy(coarse_id, centroid_id)), probed
+    from IVF2.build (partitionBy(coarse_id, centroid_id)), probed
     by the same deterministic cascade as ann_ivf2_topk — so the oracle is
     the SAME replay, and the driver hash proves the materialized layout
     serves identical results. The probe's isin() filters sit on BOTH
@@ -6249,20 +5658,9 @@ def ann_ivf2_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_similarity.py asserts the PartitionFilters). Serving is
     TRAIN-FREE: both shortlists rank the query against the STORED
     coarse/ and fine/ tables — centroid-count rows, no corpus stage."""
-    import os
-
-    from ..io import materialization_is_fresh
-
     vecs = _vectors(spark, sf_dir)
     k = auto_centroids(vecs.count())
-    kc = coarse_centroid_count(k)
-    path = _ivf2_index_path(sf_dir, k, kc)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    if not all(
-        materialization_is_fresh(os.path.join(path, d), src)
-        for d in ("vectors", "fine", "coarse")
-    ):
-        ivf2_build_index(spark, sf_dir, path, k, kc)
+    path = _materialized(IVF2, sf_dir, k, "index", None, lambda p: IVF2.build(vecs, p, k))
     q_row = vecs.filter(F.col("vec_id") == 0).select("embedding").head()
     if q_row is None:
         return spark.createDataFrame([], "vec_id bigint, sim double")
@@ -6428,21 +5826,8 @@ def ann_recall_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine probe, the same way the honest curve says how to size nprobe."""
     vecs = _vectors(spark, sf_dir)
     k = auto_centroids(vecs.count())
-    kc = coarse_centroid_count(k)
-    fine, coarse = ivf2_centroids(vecs, k, kc)
-    wf = Window.partitionBy("centroid_id").orderBy(F.col("cs").desc(), F.col("coarse_id"))
-    f2c = (
-        fine.crossJoin(F.broadcast(coarse))
-        .select(
-            "centroid_id",
-            "c_emb",
-            "coarse_id",
-            F.round(cosine(F.col("c_emb"), F.col("g_emb")), 9).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select("centroid_id", "c_emb", "coarse_id")
-    )
+    fine, coarse = ivf2_centroids(vecs, k)
+    f2c = _fine_to_coarse(fine, coarse)
     queries = F.broadcast(
         vecs.filter(F.col("vec_id") < ANN_RECALL_NQ).select(
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
@@ -6542,21 +5927,8 @@ def _ivf2_pair_hits(spark: SparkSession, sf_dir: str):
     so the bench's sweep can read the measured curve directly."""
     vecs = _vectors(spark, sf_dir)
     k = auto_centroids(vecs.count())
-    kc = coarse_centroid_count(k)
-    fine, coarse = ivf2_centroids(vecs, k, kc)
-    wf = Window.partitionBy("centroid_id").orderBy(F.col("cs").desc(), F.col("coarse_id"))
-    f2c = (
-        fine.crossJoin(F.broadcast(coarse))
-        .select(
-            "centroid_id",
-            "c_emb",
-            "coarse_id",
-            F.round(cosine(F.col("c_emb"), F.col("g_emb")), 9).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select("centroid_id", "c_emb", "coarse_id")
-    )
+    fine, coarse = ivf2_centroids(vecs, k)
+    f2c = _fine_to_coarse(fine, coarse)
     queries = F.broadcast(
         vecs.filter(F.col("vec_id") < ANN_RECALL_NQ).select(
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")

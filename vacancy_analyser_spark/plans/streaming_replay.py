@@ -713,9 +713,9 @@ def _ann_stream_delete_ivf2_oracle() -> str:
 @_narrow_stream_width
 def ann_stream_delete_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming takedown queue driven over a NESTED layout,
-    driver-checked (r10 verdict: the queue was layout-generic via
-    ``partition_cols=`` but only the flat layout had a streamed driver
-    oracle; at scale the nested layouts are the ones actually served).
+    oracle-checked (r10 verdict: the queue was layout-generic but only
+    the flat layout had a streamed oracle; at scale the nested layouts
+    are the ones actually served).
     Fixture: build the full two-level index, then replay the takedown set
     (vec_id ≡ {{DEL_REM}} mod {{DEL_MOD}}) through
     start_ann_delete_stream as FOUR micro-batches — the ids split in
@@ -723,7 +723,7 @@ def ann_stream_delete_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once case: deleting an absent id locates no victims and
     writes nothing, so the redelivery must be a provable no-op on the
     driver's own check, not just in pytest). Per trigger the fold runs
-    ivf_index_delete with partition_cols=("coarse_id", "centroid_id"):
+    ivf_index_delete on the index's (coarse_id, centroid_id) key:
     nested victim directories rewritten, emptied leaves swept with their
     hollow parents, both quantizer levels frozen, each fold under the
     index's maintenance lease.
@@ -737,11 +737,10 @@ def ann_stream_delete_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.similarity import (
         DEL_MOD,
         DEL_REM,
+        IVF2,
         _memo_read,
         _vectors,
         auto_centroids,
-        coarse_centroid_count,
-        ivf2_build_index_frame,
     )
     from ..streaming.ann_ingest import start_ann_delete_stream
 
@@ -752,7 +751,6 @@ def ann_stream_delete_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "vec_id bigint, centroid_id bigint, coarse_id bigint"
         )
     k = auto_centroids(n)
-    kc = coarse_centroid_count(k)
     root = tempfile.mkdtemp(prefix="ann_stream_del2_")
     index = os.path.join(root, "index")
     src = os.path.join(root, "queue")
@@ -770,9 +768,7 @@ def ann_stream_delete_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
         # build ∥ queue staging — independent job chains (guide §2.6; see
         # ann_apply_log_replay)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fut = pool.submit(
-                ivf2_build_index_frame, vecs, index, k, kc, schema_memo=memo
-            )
+            fut = pool.submit(IVF2.build, vecs, index, k, schema_memo=memo)
             _stage_batches(batches, src)
             fut.result()
         stream = (
@@ -781,12 +777,7 @@ def ann_stream_delete_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
         q = start_ann_delete_stream(
-            stream,
-            index,
-            ckpt,
-            available_now=True,
-            partition_cols=("coarse_id", "centroid_id"),
-            schema_memo=memo,
+            stream, index, ckpt, available_now=True, schema_memo=memo
         )
         _await(q)
         out = (
@@ -981,7 +972,7 @@ def ann_apply_log_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The single-owner command log over the NESTED layout: the same
     five-trigger replay as ann_apply_log_replay (two add slices, a
     redelivered add batch, a delete batch, a redelivered delete batch)
-    folded with layout='ivf2' — adds assign once against the STORED fine
+    folded into a two-level index — adds assign once against the STORED fine
     table (the nested partition key rides the stored coarse_id, zero
     coarse-level work per trigger), deletes rewrite only the victim
     (coarse_id, centroid_id) directories, every fold under the lease.
@@ -992,11 +983,10 @@ def ann_apply_log_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.similarity import (
         DEL_MOD,
         DEL_REM,
+        IVF2,
         _memo_read,
         _vectors,
         auto_centroids,
-        coarse_centroid_count,
-        ivf2_build_index_frame,
     )
     from ..streaming.ann_ingest import start_ann_apply_stream
 
@@ -1008,7 +998,6 @@ def ann_apply_log_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "vec_id bigint, centroid_id bigint, coarse_id bigint"
         )
     k = auto_centroids(n_base)
-    kc = coarse_centroid_count(k)
     root = tempfile.mkdtemp(prefix="ann_apply_log2_")
     index = os.path.join(root, "index")
     src = os.path.join(root, "log")
@@ -1036,9 +1025,7 @@ def ann_apply_log_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
         # build ∥ log staging — independent job chains (guide §2.6; see
         # ann_apply_log_replay)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fut = pool.submit(
-                ivf2_build_index_frame, base, index, k, kc, schema_memo=memo
-            )
+            fut = pool.submit(IVF2.build, base, index, k, schema_memo=memo)
             _stage_batches(batches, src)
             fut.result()
         stream = (
@@ -1047,8 +1034,7 @@ def ann_apply_log_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
         q = start_ann_apply_stream(
-            stream, index, ckpt, available_now=True, layout="ivf2",
-            schema_memo=memo,
+            stream, index, ckpt, available_now=True, schema_memo=memo
         )
         _await(q)
         out = (

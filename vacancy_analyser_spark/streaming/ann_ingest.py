@@ -74,9 +74,10 @@ def start_ann_ingest_stream(
     compact_every: int | None = None,
     schema_memo: dict | None = None,
 ) -> StreamingQuery:
-    """Fold a streaming (vec_id, embedding) frame into the IVF index at
-    ``index_path`` (built by ivf_build_index / ivf_build_index_frame — the
-    stored ``centroids/`` table must exist; the trainer never runs here).
+    """Fold a streaming (vec_id, embedding) frame into the index at
+    ``index_path`` — any layout (built by Layout.build; its stored
+    quantizer tables must exist, the trainer never runs here): each
+    micro-batch goes through plans.similarity.ivf_index_incremental_add.
 
     Trigger contract mirrors start_jdbc_upsert_stream: ``available_now=True``
     drains what exists and stops (the cron-shaped ingest job);
@@ -93,23 +94,13 @@ def start_ann_ingest_stream(
     it rewrites only partitions holding more files than their bytes
     justify, so steady-state cost tracks the batches since the last
     sweep, not the index."""
-    if available_now and processing_time is not None:
-        raise ValueError(
-            "available_now=True drains and stops — processing_time would be "
-            "silently ignored; pass available_now=False for a resident stream"
-        )
-    if not available_now and processing_time is None:
-        raise ValueError(
-            "available_now=False requires processing_time — omitting it would "
-            "run an unthrottled micro-batch loop"
-        )
     if compact_every is not None and compact_every < 1:
         raise ValueError("compact_every must be a positive trigger count")
 
     import os
 
     from ..operators.compaction import compact_partitions
-    from ..plans.similarity import ivf_index_incremental_add
+    from ..plans.similarity import index_layout, ivf_index_incremental_add
 
     # one schema memo per stream: this loop is the index's single writer
     # for its lifetime (every fold holds the maintenance lease), so the
@@ -118,23 +109,24 @@ def start_ann_ingest_stream(
     memo = {} if schema_memo is None else schema_memo
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
         ivf_index_incremental_add(
-            batch_df.sparkSession, index_path, batch_df, skip_existing=True,
-            schema_memo=memo,
+            spark, index_path, batch_df, skip_existing=True, schema_memo=memo
         )
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_partitions(
-                batch_df.sparkSession, os.path.join(index_path, "vectors")
+                spark,
+                os.path.join(index_path, "vectors"),
+                index_layout(spark, index_path, memo).partition_cols,
             )
 
-    writer = batches.writeStream.foreachBatch(
-        _leased(index_path, "ann-ingest", _fold, DEFAULT_LEASE_TIMEOUT)
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start_fold_stream(
+        batches,
+        checkpoint,
+        _leased(index_path, "ann-ingest", _fold, DEFAULT_LEASE_TIMEOUT),
+        available_now,
+        processing_time,
+    )
 
 
 def start_ann_delete_stream(
@@ -143,7 +135,6 @@ def start_ann_delete_stream(
     checkpoint: str,
     available_now: bool = True,
     processing_time: str | None = None,
-    partition_cols: tuple[str, ...] = ("centroid_id",),
     schema_memo: dict | None = None,
 ) -> StreamingQuery:
     """The takedown twin of start_ann_ingest_stream: a stream of vec_ids
@@ -156,23 +147,10 @@ def start_ann_delete_stream(
     Deletion is idempotent BY CONSTRUCTION (re-deleting an absent id
     finds no victims and writes nothing), so foreachBatch retries and
     at-least-once delivery are safe without any skip_existing machinery.
-    Same trigger contract as the ingest stream. ``partition_cols`` names
-    the served layout's partition key, exactly as for the batch delete —
-    ("centroid_id",) for flat IVF/IVFPQ (the codes column rides through
-    the layout-agnostic rewrite), ("coarse_id", "centroid_id") for the
-    two-level layout, ("centroid_id", "sub_id") for the split layout —
-    so ONE takedown queue serves every materialized index shape."""
-    if available_now and processing_time is not None:
-        raise ValueError(
-            "available_now=True drains and stops — processing_time would be "
-            "silently ignored; pass available_now=False for a resident stream"
-        )
-    if not available_now and processing_time is None:
-        raise ValueError(
-            "available_now=False requires processing_time — omitting it would "
-            "run an unthrottled micro-batch loop"
-        )
-
+    Same trigger contract as the ingest stream. The delete reads the
+    served layout's partition key from the index itself, exactly as the
+    batch delete does, so ONE takedown queue serves every materialized
+    index shape."""
     from ..plans.similarity import ivf_index_delete
 
     # single-writer schema memo, same reasoning as start_ann_ingest_stream
@@ -191,86 +169,20 @@ def start_ann_delete_stream(
             batch_df.sparkSession,
             index_path,
             batch_df.select("vec_id"),
-            partition_cols=partition_cols,
             schema_memo=memo,
             n_ids_hint=n,
         )
 
-    writer = deletions.writeStream.foreachBatch(
+    return _start_fold_stream(
+        deletions,
+        checkpoint,
         _leased(
             index_path, "ann-delete", _fold, DEFAULT_LEASE_TIMEOUT,
             probe_empty=False,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def start_ann_split_ingest_stream(
-    batches: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
-    compact_every: int | None = None,
-    schema_memo: dict | None = None,
-) -> StreamingQuery:
-    """The split-layout twin of start_ann_ingest_stream: micro-batches
-    fold into a selectively-split index (plans/similarity.py
-    split_index_incremental_add) — two-stage assignment against BOTH
-    stored frozen quantizer levels, partition-scoped append into
-    (centroid_id, sub_id) directories. Same trigger contract, same
-    skip_existing idempotency under replay, same optional in-loop
-    compaction (the split layout fragments exactly like the flat one).
-
-    With this, every servable layout's steady-state ingest is a stream:
-    flat/IVFPQ/two-level via their batch adds behind
-    start_ann_ingest_stream-shaped loops, and the post-split layout here
-    — a cell split no longer forces the ingest path back to rebuilds."""
-    if available_now and processing_time is not None:
-        raise ValueError(
-            "available_now=True drains and stops — processing_time would be "
-            "silently ignored; pass available_now=False for a resident stream"
-        )
-    if not available_now and processing_time is None:
-        raise ValueError(
-            "available_now=False requires processing_time — omitting it would "
-            "run an unthrottled micro-batch loop"
-        )
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be a positive trigger count")
-
-    import os
-
-    from ..operators.compaction import compact_partitions
-    from ..plans.similarity import split_index_incremental_add
-
-    # single-writer schema memo, same reasoning as start_ann_ingest_stream
-    memo = {} if schema_memo is None else schema_memo
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        split_index_incremental_add(
-            batch_df.sparkSession, index_path, batch_df, skip_existing=True,
-            schema_memo=memo,
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_partitions(
-                batch_df.sparkSession,
-                os.path.join(index_path, "vectors"),
-                ("centroid_id", "sub_id"),
-            )
-
-    writer = batches.writeStream.foreachBatch(
-        _leased(index_path, "ann-split-ingest", _fold, DEFAULT_LEASE_TIMEOUT)
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+        ),
+        available_now,
+        processing_time,
+    )
 
 
 def start_ann_apply_stream(
@@ -280,8 +192,6 @@ def start_ann_apply_stream(
     available_now: bool = True,
     processing_time: str | None = None,
     compact_every: int | None = None,
-    layout: str = "flat",
-    partition_cols: tuple[str, ...] | None = None,
     schema_memo: dict | None = None,
 ) -> StreamingQuery:
     """ONE loop owns the index: a unified command log — rows
@@ -323,12 +233,9 @@ def start_ann_apply_stream(
     committed (which is what makes cross-batch add-then-delete stable
     under recovery).
 
-    ``layout`` selects the add fold and implies the partition key, so ONE
-    command-log applier serves every materialized shape: 'flat'
-    (('centroid_id',), flat IVF), 'ivfpq' (('centroid_id',), codes from
-    the stored codebook), 'ivf2' (('coarse_id', 'centroid_id')), 'split'
-    (('centroid_id', 'sub_id')). ``partition_cols`` may override the
-    implied key (rarely needed)."""
+    The add, the delete and the compaction sweep all take the layout
+    from the index itself (plans.similarity.index_layout), so ONE
+    command-log applier serves every materialized shape."""
     if compact_every is not None and compact_every < 1:
         raise ValueError("compact_every must be a positive trigger count")
 
@@ -336,17 +243,6 @@ def start_ann_apply_stream(
 
     from ..operators.compaction import compact_partitions
     from ..plans import similarity as S
-
-    adders = {
-        "flat": (S.ivf_index_incremental_add, ("centroid_id",)),
-        "ivfpq": (S.ivfpq_index_incremental_add, ("centroid_id",)),
-        "ivf2": (S.ivf2_index_incremental_add, ("coarse_id", "centroid_id")),
-        "split": (S.split_index_incremental_add, ("centroid_id", "sub_id")),
-    }
-    if layout not in adders:
-        raise ValueError(f"unknown layout {layout!r}; one of {sorted(adders)}")
-    add_fn, implied_cols = adders[layout]
-    cols = partition_cols if partition_cols is not None else implied_cols
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -387,7 +283,7 @@ def start_ann_apply_stream(
             # deletes first: a re-added id must not be skip_existing-
             # skipped into keeping its pre-delete embedding
             S.ivf_index_delete(
-                spark, index_path, last_del.select("vec_id"), partition_cols=cols,
+                spark, index_path, last_del.select("vec_id"),
                 schema_memo=memo, n_ids_hint=n_del,
             )
             adds = (
@@ -410,12 +306,16 @@ def start_ann_apply_stream(
             # net_adds can only be empty when in-batch deletes outlasted
             # every add — the one case that still needs its own probe
             if not n_del or not net_adds.isEmpty():
-                add_fn(
+                S.ivf_index_incremental_add(
                     spark, index_path, net_adds, skip_existing=True,
                     schema_memo=memo,
                 )
         if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_partitions(spark, os.path.join(index_path, "vectors"), cols)
+            compact_partitions(
+                spark,
+                os.path.join(index_path, "vectors"),
+                S.index_layout(spark, index_path, memo).partition_cols,
+            )
 
     return _start_fold_stream(
         commands,
@@ -436,10 +336,10 @@ def _start_fold_stream(
     available_now: bool,
     processing_time: str | None,
 ) -> StreamingQuery:
-    """Shared trigger/contract plumbing for the layout-specific ingest
-    twins below (the two original streams predate it and keep their
-    inlined copies — green driver rows belong to the code that earned
-    them)."""
+    """Shared trigger contract and plumbing of every ANN maintenance
+    stream: ``available_now=True`` drains what exists and stops (the
+    cron-shaped job); ``available_now=False`` requires ``processing_time``
+    for a resident stream — both misuse combinations raise."""
     if available_now and processing_time is not None:
         raise ValueError(
             "available_now=True drains and stops — processing_time would be "
@@ -458,73 +358,3 @@ def _start_fold_stream(
     else:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
-
-
-def start_ann_ivfpq_ingest_stream(
-    batches: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
-    schema_memo: dict | None = None,
-) -> StreamingQuery:
-    """Streaming ingest into the COMPRESSED index: each micro-batch's PQ
-    codes come from the STORED codebook and its cell from the STORED
-    centroids (plans/similarity.py ivfpq_index_incremental_add — both
-    trained artifacts frozen, the add's rebuild-equivalence contract),
-    appended partition-scoped with skip_existing replay idempotency.
-    Completes the streaming-ingest matrix alongside the flat
-    (start_ann_ingest_stream), split (start_ann_split_ingest_stream)
-    and two-level (start_ann_ivf2_ingest_stream) loops."""
-    from ..plans.similarity import ivfpq_index_incremental_add
-
-    # single-writer schema memo, same reasoning as start_ann_ingest_stream
-    memo = {} if schema_memo is None else schema_memo
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        ivfpq_index_incremental_add(
-            batch_df.sparkSession, index_path, batch_df, skip_existing=True,
-            schema_memo=memo,
-        )
-
-    return _start_fold_stream(
-        batches,
-        checkpoint,
-        _leased(index_path, "ann-ivfpq-ingest", _fold, DEFAULT_LEASE_TIMEOUT),
-        available_now,
-        processing_time,
-    )
-
-
-def start_ann_ivf2_ingest_stream(
-    batches: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
-    schema_memo: dict | None = None,
-) -> StreamingQuery:
-    """Streaming ingest into the TWO-LEVEL index: one broadcast
-    assignment per micro-batch against the STORED fine centroids (the
-    stored fine/ table carries each cell's coarse_id, so the nested
-    (coarse_id, centroid_id) partition key costs zero coarse-level
-    work), skip_existing replay idempotency, partition-scoped appends
-    into the nested directories."""
-    from ..plans.similarity import ivf2_index_incremental_add
-
-    # single-writer schema memo, same reasoning as start_ann_ingest_stream
-    memo = {} if schema_memo is None else schema_memo
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        ivf2_index_incremental_add(
-            batch_df.sparkSession, index_path, batch_df, skip_existing=True,
-            schema_memo=memo,
-        )
-
-    return _start_fold_stream(
-        batches,
-        checkpoint,
-        _leased(index_path, "ann-ivf2-ingest", _fold, DEFAULT_LEASE_TIMEOUT),
-        available_now,
-        processing_time,
-    )
